@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.QueryPack
-import graft.sources.Tables
+import graft.sources.{CacheRegistry, Tables}
 import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -23,47 +23,18 @@ import org.apache.spark.storage.StorageLevel
   */
 object Curation extends QueryPack {
 
-  /** Per-session materialization of the component labels, keyed by data
-    * dir — the Spark analogue of a dbt model built once and read by
-    * every downstream model: `cur_corpus` consumes the SAME labels
-    * `cur_components` produced instead of re-running the edge pipeline.
-    * The entry holds the final (small: one row per doc_id) cached
-    * DataFrame; callers that mutate the underlying files must
-    * [[clearComponentCache]]. */
-  private val componentCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  def clearComponentCache(): Unit = {
-    componentCache.values.foreach(GraftBridge.releaseLocalCheckpoint)
-    componentCache.clear()
-  }
-
   /** The co-purchase edge table (u < v, distinct) shared by the graph
     * family — [[triangles]], [[kcore]], [[communities]]: derived ONCE
-    * per (session, dir) and held as a localCheckpoint ([[componentCache]]
-    * precedent — a pipeline materializes shared intermediates, it does
-    * not re-run them per consumer; measured 6.1 s per derivation at
+    * per (session, corpus) and held as a localCheckpoint in the
+    * [[CacheRegistry]] ([[components]] precedent — a pipeline
+    * materializes shared intermediates, it does not re-run them per
+    * consumer; measured 6.1 s per derivation at
     * sf0.1, so the third consumer rides for free). The self-join is
     * spread explicitly before joining: its OUTPUT is ~2× the input and
     * AQE coalesces by input size (the triangles wedge lesson), which
     * would otherwise serialize the pair generation. */
-  private val coPurchaseCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  /** Drops every cached graph intermediate ([[coPurchaseCache]] and
-    * [[multiEdgeCache]]), unpersisting the checkpointed RDDs before
-    * forgetting the handles — the [[clearComponentCache]] contract.
-    * Callers that mutate the underlying files must call this (and
-    * [[clearComponentCache]]) or graph results are silently stale. */
-  def clearCoPurchaseCache(): Unit = {
-    coPurchaseCache.values.foreach(GraftBridge.releaseLocalCheckpoint)
-    coPurchaseCache.clear()
-    multiEdgeCache.values.foreach(GraftBridge.releaseLocalCheckpoint)
-    multiEdgeCache.clear()
-  }
-
   private def coPurchaseEdges(spark: SparkSession, dir: String): DataFrame =
-    coPurchaseCache.getOrElseUpdate((spark, dir), {
+    CacheRegistry.getOrBuild(spark, dir, "coPurchase", "lineitem") {
       val nPart = spark.sessionState.conf.numShufflePartitions
       val items = Tables.lineitem(spark, dir)
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("pid"))
@@ -74,7 +45,7 @@ object Curation extends QueryPack {
         .filter(col("u") < col("v"))
         .select(col("u"), col("v")).distinct()
         .localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
-    })
+    }
 
   /** Edge-store ceiling for [[componentsOf]]'s driver union-find fast
     * path: below it the verified near-dup pair set is a few hundred
@@ -231,13 +202,16 @@ object Curation extends QueryPack {
   }
 
   /** Near-dup connected components over [[Dedup.ngramJaccard]] edges,
-    * materialized once per (session, dir) — see [[componentCache]]. The
-    * explicit localCheckpoint keeps the CACHE semantics material: the
+    * materialized once per (session, corpus) in the [[CacheRegistry]] —
+    * the Spark analogue of a dbt model built once and read by every
+    * downstream model: `cur_corpus` consumes the SAME labels
+    * `cur_components` produced instead of re-running the edge pipeline.
+    * The explicit localCheckpoint keeps the CACHE semantics material: the
     * driver union-find fast path returns a lazy broadcast-join plan,
     * which would re-scan documents on every consumer action
     * (cur_components re-read 0.03 → 0.19 s when this was a plan). */
   def components(spark: SparkSession, dir: String): DataFrame =
-    componentCache.getOrElseUpdate((spark, dir),
+    CacheRegistry.getOrBuild(spark, dir, "components", "documents")(
       componentsOf(Tables.documents(spark, dir), Dedup.ngramJaccard(spark, dir))
         .localCheckpoint())
 
@@ -319,18 +293,14 @@ object Curation extends QueryPack {
     * pins mass conservation, symmetry on a ring, hub dominance on a
     * star, and run-to-run equality. */
   /** The co-purchase MULTIGRAPH (parallel edges per co-occurring
-    * order) for [[pageRank]], cached per (session, dir) like
+    * order) for [[pageRank]], cached per (session, corpus) like
     * [[coPurchaseEdges]] — the derivation re-ran per bench rep
-    * otherwise; invalidated (with unpersist) by
-    * [[clearCoPurchaseCache]]. Multigraph on purpose: parts co-purchased in k orders
+    * otherwise. Multigraph on purpose: parts co-purchased in k orders
     * contribute k parallel edges — rank flows proportional to
     * co-occurrence strength, and skipping the edge-level distinct
     * deletes the pipeline's largest shuffle (2.4M rows at sf0.1). */
-  private val multiEdgeCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
   private def coPurchaseMultiEdges(spark: SparkSession, dir: String): DataFrame =
-    multiEdgeCache.getOrElseUpdate((spark, dir), {
+    CacheRegistry.getOrBuild(spark, dir, "multiEdges", "lineitem") {
       val items = Tables.lineitem(spark, dir)
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("pid")).distinct()
       val a = items.select(col("ok"), col("pid").as("src"))
@@ -338,7 +308,7 @@ object Curation extends QueryPack {
       a.join(b, "ok").filter(col("src") =!= col("dst"))
         .select(col("src"), col("dst"))
         .localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
-    })
+    }
 
   def pageRank(spark: SparkSession, dir: String): DataFrame =
     pageRankOf(coPurchaseMultiEdges(spark, dir))
@@ -471,7 +441,7 @@ object Curation extends QueryPack {
   /** Core census over a simple undirected edge list (u < v, distinct). */
   private[graft] def trianglesOf(e0: DataFrame): DataFrame = {
     // reuse the shared edge checkpoint when the caller pinned one
-    // (coPurchaseCache) — storage policy note in pageRankOf
+    // (coPurchaseEdges) — storage policy note in pageRankOf
     val e =
       if (e0.storageLevel == StorageLevel.NONE) e0.localCheckpoint()
       else e0
@@ -1133,8 +1103,6 @@ object Curation extends QueryPack {
     // regression before this)
     val undBytes = GraftBridge.checkpointStorageBytes(und)
     val small = nNodes <= stateBroadcastMaxRows && undBytes <= SmallGraphEdgeBytes
-    if (sys.env.contains("GRAFT_DEBUG_LPA"))
-      println(s"[lpa] nNodes=$nNodes undBytes=$undBytes small=$small")
     val votePart =
       if (!small) nPart
       else math.max(8, math.min(nPart, (nNodes / 16384L).toInt + 1))

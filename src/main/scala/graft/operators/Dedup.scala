@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.QueryPack
 import graft.functions.VectorOps
-import graft.sources.Tables
+import graft.sources.{CacheRegistry, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -50,7 +50,7 @@ object Dedup extends QueryPack {
     * array op moves 8 bytes per shingle, never the text.
     *
     * MATERIALIZED once per (session, corpus) — r17 optimization round,
-    * the [[spanGramCache]] / canonicalCache pattern one level down:
+    * the span-gram / canonical pattern one level down:
     * the shingle projection is inlined into EVERY consumer reference
     * (both prefix sides + both verify sides of the PPJoin keys), so
     * each of `dedup_ngram_jaccard` / `_containment` / `_incremental` /
@@ -60,14 +60,8 @@ object Dedup extends QueryPack {
     * order 150 MB at sf0.1 — held serialized; every consumer reference
     * is then a columnar cache scan. Per-invocation pair joins, bands,
     * and verification are untouched. */
-  private val shingleCache = new graft.sources.CorpusCache[Unit]
-
-  def clearShingleCache(): Unit = shingleCache.clear()
-
   private def hashedShingles(spark: SparkSession, dir: String): DataFrame =
-    shingleCache.getOrBuild(
-      org.apache.spark.sql.GraftBridge.sessionUUID(spark),
-      Tables.tableFingerprint(dir, "documents"), ())(
+    CacheRegistry.getOrBuild(spark, dir, "shingles", "documents")(
       hashedShinglesOf(Tables.documents(spark, dir)).localCheckpoint(true,
         org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
 
@@ -563,14 +557,8 @@ object Dedup extends QueryPack {
     * ObjectHashAggregate bucket-group); with the frame checkpointed the
     * pass runs once per corpus and both sides scan ~|V|·32 rows of
     * three longs. Shared with [[bucketStats]]' cosine telemetry band. */
-  private val cosineBandCache = new graft.sources.CorpusCache[Unit]
-
-  def clearCosineBandCache(): Unit = cosineBandCache.clear()
-
   private def cosineBands(spark: SparkSession, dir: String): DataFrame =
-    cosineBandCache.getOrBuild(
-      org.apache.spark.sql.GraftBridge.sessionUUID(spark),
-      Tables.tableFingerprint(dir, "embeddings"), ())(
+    CacheRegistry.getOrBuild(spark, dir, "cosineBands", "embeddings")(
       cosineBandsOf(Tables.embeddings(spark, dir)).localCheckpoint(true,
         org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
 
@@ -828,23 +816,12 @@ object Dedup extends QueryPack {
     * / `_best` / `_embed` share the exact-PPJoin edge build + component
     * stage (and `_map_lsh` its own LSH tier) instead of re-shingling
     * the corpus per key. The cached frame is one (long, long) row per
-    * doc, held as a localCheckpoint; callers that mutate the underlying
-    * files must [[clearCanonicalCache]]. */
-  private val canonicalCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String), DataFrame]
-
-  def clearCanonicalCache(): Unit = {
-    canonicalCache.values.foreach(
-      org.apache.spark.sql.GraftBridge.releaseLocalCheckpoint)
-    canonicalCache.clear()
-  }
-
-  /** The cached (doc_id, component) frame for the named edge tier
-    * ("exact" = PPJoin verified pairs; "lsh" = MinHash-LSH verified
-    * pairs). */
+    * doc, held as a localCheckpoint in the [[CacheRegistry]]. The edge
+    * tier is "exact" (PPJoin verified pairs) or "lsh" (MinHash-LSH
+    * verified pairs). */
   private def componentMapFor(spark: SparkSession, dir: String,
       tier: String): DataFrame =
-    canonicalCache.getOrElseUpdate((spark, dir, tier), {
+    CacheRegistry.getOrBuild(spark, dir, s"canonical:$tier", "documents") {
       val docs = Tables.documents(spark, dir)
       val pairsOf: DataFrame => DataFrame = tier match {
         case "lsh" => d => minhashLshOf(d, HotBucketCap)
@@ -853,7 +830,7 @@ object Dedup extends QueryPack {
           .select(col("doc_a"), col("doc_b"))
       }
       componentMapOf(docs, pairsOf).localCheckpoint()
-    })
+    }
 
   /** The shared component stage under the canonical-map family: every
     * doc labeled with the MIN doc_id of its near-dup connected
@@ -1045,22 +1022,16 @@ object Dedup extends QueryPack {
     spanLenOf(r.getLong(0), r.getLong(1))
   }
 
-  /** Per-session cache of the derived span length, keyed by (dir,
-    * planted?): L is a property of the CORPUS, shared by all five
+  /** The derived span length per (corpus, planted?), cached in the
+    * [[CacheRegistry]]: L is a property of the CORPUS, shared by all five
     * substring keys — re-deriving it per key was a measured ~0.4 s of
-    * repeated vocab-grain aggregation per invocation in-sweep. Same
-    * immutable-fixture contract as [[canonicalCache]]. */
-  private val spanLenDirCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Boolean), Int]
-
-  def clearSpanLenCache(): Unit = spanLenDirCache.clear()
-
+    * repeated vocab-grain aggregation per invocation in-sweep. */
   private def spanLenFor(spark: SparkSession, dir: String,
       planted: Boolean): Int =
-    spanLenDirCache.getOrElseUpdate((spark, dir, planted), {
+    CacheRegistry.getOrBuild(spark, dir, s"spanLen:$planted", "documents") {
       val docs = Tables.documents(spark, dir).toDF()
       deriveSpanLen(if (planted) plantedSubstringDocs(docs) else docs)
-    })
+    }
 
   /** The substring family's PLANTED gate corpus (r15 verdict item 1):
     * the fixture word-soup carries almost no organic ≥ 8-token overlap
@@ -1146,11 +1117,11 @@ object Dedup extends QueryPack {
       spanGramsFor(spark, dir, planted = true, hashed = true, l), l)
   }
 
-  /** Per-session materialization of the pruned gram frame, keyed by
-    * (session, corpus fingerprint, planted?, hashed?, L) — the
-    * [[canonicalCache]] / Similarity-statCache pattern applied to the
-    * substring family (r17 optimization round): the five substring keys
-    * re-ran the SAME gram explode + hot-gram df aggregate + anti-join
+  /** Per-session materialization of the pruned gram frame per
+    * (corpus, planted?, hashed?, L) in the [[CacheRegistry]], as the
+    * canonical family and Similarity's trained statistics do, applied
+    * to the substring family (r17 optimization round): the five
+    * substring keys re-ran the SAME gram explode + hot-gram df aggregate + anti-join
     * per invocation — `dedup_substring_self` and `_spans` share the
     * (planted, raw, L) frame exactly, `_hashed` the (planted, hashed)
     * one, `_removed` (raw, hashed), `_incremental` (raw, raw); each
@@ -1158,19 +1129,11 @@ object Dedup extends QueryPack {
     * Pinned DISK_ONLY, not in-memory: the raw-gram frames are ~18M rows
     * of gram strings at sf0.1 (order 1 GB), and pinning that on an 8 GB
     * bench heap taxes every LATER key's GC — local-disk blocks ride the
-    * OS page cache instead. Callers that mutate the underlying files
-    * must [[clearSpanGramCache]] (fingerprint keys also self-invalidate
-    * on any listable rewrite). */
-  private val spanGramCache =
-    new graft.sources.CorpusCache[(Boolean, Boolean, Int)]
-
-  def clearSpanGramCache(): Unit = spanGramCache.clear()
-
+    * OS page cache instead. */
   private def spanGramsFor(spark: SparkSession, dir: String,
       planted: Boolean, hashed: Boolean, spanLen: Int): DataFrame =
-    spanGramCache.getOrBuild(
-      org.apache.spark.sql.GraftBridge.sessionUUID(spark),
-      Tables.tableFingerprint(dir, "documents"), (planted, hashed, spanLen)) {
+    CacheRegistry.getOrBuild(spark, dir,
+        s"spanGram:$planted:$hashed:$spanLen", "documents") {
       val docs0 = Tables.documents(spark, dir).toDF()
       val docs = if (planted) plantedSubstringDocs(docs0) else docs0
       spanGramsOf(docs, hashed, spanLen)
@@ -1223,7 +1186,7 @@ object Dedup extends QueryPack {
 
   /** Pair join + islands over an already-built pruned gram frame — the
     * per-invocation half of the spans keys (the gram stage itself is
-    * shared through [[spanGramCache]] on the dir-level paths). */
+    * shared through [[spanGramsFor]] on the dir-level paths). */
   private def substringSpansOnGrams(pruned: DataFrame,
       spanLen: Int): DataFrame = {
     val m = pruned.as("x").join(pruned.as("y"),

@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.QueryPack
 import graft.functions.{HyperplaneSigs, VectorOps}
-import graft.sources.Tables
+import graft.sources.{CacheRegistry, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -267,54 +267,13 @@ object Similarity extends QueryPack {
   // Centroids, regime signals, PQ/residual codebooks, and the OPQ
   // rotation are all STATISTICS OF THE CORPUS, not of any one query —
   // an index serves many queries, and re-training per key was measured
-  // waste (canonical-cache precedent; sim_topk_opq retrained R + books
-  // per invocation at 5.5 s/key in the r16 sweep). One cache holds them
-  // all, keyed by:
-  //  - the session UUID STRING (not the SparkSession object — a strong
-  //    session reference would pin every stopped session's state for
-  //    the process lifetime);
-  //  - a corpus FINGERPRINT (file listing + sizes + mtimes of the
-  //    embeddings parquet), so a same-path fixture REWRITE invalidates
-  //    naturally instead of serving stale statistics — previously the
-  //    contract was only enforced by test convention (clear + fresh
-  //    temp dirs);
-  //  - a tag naming the statistic and its parameters.
-  // Bounded: at [[StatCacheMax]] entries the whole cache clears (the
-  // values are re-derivable; correctness never depends on a hit).
-  private val statCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String, String), Any]
-  private val StatCacheMax = 512
-
-  /** Cheap invalidation signal: the embeddings parquet's file listing
-    * with sizes and mtimes. Unlistable paths (remote schemes) fall back
-    * to the dir string — per-path caching without rewrite detection,
-    * the pre-r17 contract (callers must clear explicitly). */
-  private[graft] def corpusFingerprint(dir: String): String = {
-    val root = new java.io.File(s"$dir/embeddings.parquet")
-    val files =
-      if (root.isDirectory)
-        Option(root.listFiles()).getOrElse(Array.empty[java.io.File])
-          .filter(_.isFile).sortBy(_.getName)
-      else if (root.isFile) Array(root)
-      else Array.empty[java.io.File]
-    if (files.isEmpty) s"unlistable:$dir"
-    else files.map(f => s"${f.getName}:${f.length}:${f.lastModified}")
-      .mkString(s"$dir|", ",", "")
-  }
-
+  // waste (sim_topk_opq retrained R + books per invocation at 5.5 s/key
+  // in the r16 sweep). They live in the [[CacheRegistry]] under a tag
+  // naming the statistic and its parameters, fingerprinted on the
+  // embeddings table, so a rewrite retrains.
   private def statCached[T](spark: SparkSession, dir: String, tag: String)(
-      train: => T): T = {
-    if (statCache.size > StatCacheMax) statCache.clear()
-    statCache.getOrElseUpdate(
-      (org.apache.spark.sql.GraftBridge.sessionUUID(spark),
-        corpusFingerprint(dir), tag), train).asInstanceOf[T]
-  }
-
-  /** Test seam: drop every cached per-corpus statistic (regime signal,
-    * centroids, codebooks, rotation) so a rerun genuinely retrains. */
-  def clearStatCache(): Unit = statCache.clear()
-  def clearRegimeCache(): Unit = clearStatCache()
-  def clearCentroidCache(): Unit = clearStatCache()
+      train: => T): T =
+    CacheRegistry.getOrBuild(spark, dir, s"stat:$tag", "embeddings")(train)
 
   /** [[regimeSignal]] off a fixture dir, cached per corpus. */
   private[graft] def regimeSignalAt(spark: SparkSession, dir: String): Double =
@@ -485,7 +444,7 @@ object Similarity extends QueryPack {
     lloydRefine(spark, c, c.filter(col("vec_id") % stride === 0),
       iters, stride)
 
-  /** Cached Lloyd centroids per corpus — see [[statCache]]: the PQ
+  /** Cached Lloyd centroids per corpus — see [[statCached]]: the PQ
     * family (ivfpq / ivfpq_res / opq) plus the IVF keys re-derive the
     * identical seed set and refinement (deterministic stride seeds,
     * fixed-point sums) per key. The tier string separates the raw
@@ -716,7 +675,7 @@ object Similarity extends QueryPack {
     books
   }
 
-  /** Cached [[pqCodebooks]] per corpus ([[statCache]]): the direction
+  /** Cached [[pqCodebooks]] per corpus ([[statCached]]): the direction
     * codebooks are a corpus statistic shared by the pq / ivfpq /
     * serving-index paths, each of which re-derived the identical
     * deterministic training per key. */
@@ -1174,7 +1133,7 @@ object Similarity extends QueryPack {
     // not per-row artifacts; only the single encode pass below touches
     // the full corpus.
     // R and the rotated-residual codebooks are corpus statistics like
-    // the centroids — cached per corpus ([[statCache]]); retraining
+    // the centroids — cached per corpus ([[statCached]]); retraining
     // them per invocation was the whole key's cost (measured 5.5 s/key
     // in the r16 sweep, the slowest non-graph key)
     val (rot, books) = statCached(spark, dir,

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.QueryPack
-import graft.sources.Tables
+import graft.sources.{CacheRegistry, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -86,14 +86,8 @@ object TextAnalysis extends QueryPack {
     * MEMORY_AND_DISK_SER: the token arrays are the corpus text
     * re-sliced (~10 MB at sf0.1) — order documents.parquet, far below
     * the span-gram frames that needed DISK_ONLY. */
-  private val tokenCache = new graft.sources.CorpusCache[Unit]
-
-  def clearTokenCache(): Unit = tokenCache.clear()
-
   private def tokenizedDocs(spark: SparkSession, dir: String): DataFrame =
-    tokenCache.getOrBuild(
-      org.apache.spark.sql.GraftBridge.sessionUUID(spark),
-      Tables.tableFingerprint(dir, "documents"), ())(
+    CacheRegistry.getOrBuild(spark, dir, "tokens", "documents")(
       tokenizedOf(Tables.documents(spark, dir).toDF()).localCheckpoint(true,
         org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
 
@@ -864,32 +858,24 @@ object TextAnalysis extends QueryPack {
     // the trainer RUNS per invocation (the merge table IS this query's
     // result — caching it would time nothing); it publishes what it
     // trained so the TOKENIZE key, whose result is the per-doc token
-    // accounting, can reuse the corpus statistic (bpeMergeCache)
+    // accounting, can reuse the corpus statistic (bpeMergesFor)
     val m = trainBpeMerges(spark, Tables.documents(spark, dir), BpeRounds)
-    bpeMergeCache.put(bpeKey(spark, dir, BpeRounds), m)
+    bpeMergesFor(spark, dir)(m)
     mergesToDF(spark, m)
   }
 
   private val BpeRounds = 12
 
-  /** Per-corpus cache of the TRAINED merge table — the
-    * [[graft.operators.Similarity]] statCache pattern (session UUID +
-    * corpus fingerprint keyed, bounded by clearing): the merge table is
-    * a STATISTIC OF THE CORPUS, shared by the trainer key and the
-    * tokenizer key — `text_bpe_tokenize` re-ran the full 12-round
-    * trainer (explode + pair aggregate + argmax collect + fuse pass,
-    * per round) before ever tokenizing a document, measured ~1.8 s of
-    * its 3.2 s at sf0.1. Values are driver-side Seqs of ≤ rounds
-    * 5-tuples — bytes, not frames. */
-  private val bpeMergeCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String, Int), Seq[(Long, String, String, String, Long)]]
-
-  /** Test seam: drop cached merge tables so a rerun genuinely retrains. */
-  def clearBpeCache(): Unit = bpeMergeCache.clear()
-
-  private def bpeKey(spark: SparkSession, dir: String, rounds: Int) =
-    (org.apache.spark.sql.GraftBridge.sessionUUID(spark),
-      Tables.tableFingerprint(dir, "documents"), rounds)
+  /** The TRAINED merge table per corpus, cached in the [[CacheRegistry]]:
+    * the merge table is a STATISTIC OF THE CORPUS, shared by the trainer
+    * key and the tokenizer key — `text_bpe_tokenize` re-ran the full
+    * 12-round trainer (explode + pair aggregate + argmax collect + fuse
+    * pass, per round) before ever tokenizing a document, measured
+    * ~1.8 s of its 3.2 s at sf0.1. Values are driver-side Seqs of
+    * ≤ rounds 5-tuples — bytes, not frames. */
+  private def bpeMergesFor(spark: SparkSession, dir: String)(
+      train: => Seq[(Long, String, String, String, Long)]) =
+    CacheRegistry.getOrBuild(spark, dir, s"bpe:$BpeRounds", "documents")(train)
 
   private def mergesToDF(spark: SparkSession,
       m: Seq[(Long, String, String, String, Long)]): DataFrame = {
@@ -985,13 +971,12 @@ object TextAnalysis extends QueryPack {
     * independently-trained reference table, plus the rounds=0
     * degenerate (n_tokens == n_chars). */
   def bpeTokenize(spark: SparkSession, dir: String): DataFrame = {
-    // ride the trained-statistic cache (bpeMergeCache): the tokenizer's
+    // ride the trained-statistic cache (bpeMergesFor): the tokenizer's
     // RESULT — per-doc (n_words, n_chars, n_tokens) — is recomputed
     // from the corpus per invocation; only the merge-table statistic is
     // reused, exactly like the PQ codebooks / OPQ rotation
     val docs = Tables.documents(spark, dir)
-    val m = bpeMergeCache.getOrElseUpdate(bpeKey(spark, dir, BpeRounds),
-      trainBpeMerges(spark, docs, BpeRounds))
+    val m = bpeMergesFor(spark, dir)(trainBpeMerges(spark, docs, BpeRounds))
     bpeTokenizeWith(docs, m.map(t => (t._2, t._3)))
   }
 

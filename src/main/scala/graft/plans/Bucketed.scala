@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.sources.Tables
+import graft.sources.{CacheRegistry, Tables}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -56,13 +56,11 @@ object Bucketed {
       .join(spark.table("orders_bkt"),
         col("l_orderkey") === col("o_orderkey"), "inner")
 
-  private val cache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Unit]
-
   /** One-per-session bucketed materialization (same snapshot flow as
     * `Star.materializedPath`). */
   def ensure(spark: SparkSession, dir: String): Unit =
-    cache.getOrElseUpdate((spark, dir), materialize(spark, dir))
+    CacheRegistry.getOrBuild(spark, dir, "bucketed", "lineitem", "orders")(
+      materialize(spark, dir))
 
   /** Order-grained revenue rollup over the co-bucketed fact join — the
     * oracle-paired `x_star_bucketed` query key. Both scans are

@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.sources.Tables
+import graft.sources.{CacheRegistry, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -77,38 +77,36 @@ object Star {
   def materialize(spark: SparkSession, dir: String, out: String): Unit =
     build(spark, dir).write.mode("overwrite").parquet(out)
 
+  /** The five tables the star joins — what its snapshots are
+    * fingerprinted on in the [[CacheRegistry]]. */
+  private val Sources = Seq("lineitem", "orders", "customer", "supplier", "part")
+
   /** One-per-session materialized star (the reference's `sources`-layer
     * snapshot flow, `README.md:256-258`): first use CTASes the star to a
     * scratch path, every later use reads the parquet back — downstream
     * queries run against the snapshot, not the five-way join. */
-  private val matCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
-
   def materializedPath(spark: SparkSession, dir: String): String =
-    matCache.getOrElseUpdate((spark, dir), {
+    CacheRegistry.getOrBuild(spark, dir, "star", Sources: _*) {
       val out = s"${sys.props("java.io.tmpdir")}/graft_star_" +
         java.lang.Integer.toHexString(dir.hashCode)
       materialize(spark, dir, out)
       out
-    })
+    }
 
   /** Year-partitioned star materialization: the layout that makes every
     * year-ranged downstream query PRUNE whole directories at the source
     * (PartitionFilters in the scan, zero IO for other years) — at
     * 100 TB, partition columns are the first-order data-skipping lever,
     * ahead of row-group stats. */
-  private val partCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
-
   def partitionedPath(spark: SparkSession, dir: String): String =
-    partCache.getOrElseUpdate((spark, dir), {
+    CacheRegistry.getOrBuild(spark, dir, "starPartitioned", Sources: _*) {
       val out = s"${sys.props("java.io.tmpdir")}/graft_star_part_" +
         java.lang.Integer.toHexString(dir.hashCode)
       build(spark, dir)
         .withColumn("order_year", year(col("o_orderdate")))
         .write.mode("overwrite").partitionBy("order_year").parquet(out)
       out
-    })
+    }
 
   /** dbt `materialized='incremental'` re-expressed: the initial build
     * writes history (orderdate < split), a later incremental run appends
@@ -119,11 +117,8 @@ object Star {
     * scans only the new source partitions (partition pruning on the
     * incremental filter). */
   private val IncSplit = "1996-01-01"
-  private val incCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
-
   def incrementalPath(spark: SparkSession, dir: String): String =
-    incCache.getOrElseUpdate((spark, dir), {
+    CacheRegistry.getOrBuild(spark, dir, "starIncremental", Sources: _*) {
       val out = s"${sys.props("java.io.tmpdir")}/graft_star_inc_" +
         java.lang.Integer.toHexString(dir.hashCode)
       val star = build(spark, dir)
@@ -132,5 +127,5 @@ object Star {
       star.filter(to_date(col("o_orderdate")) >= lit(IncSplit))
         .write.mode("append").parquet(out)    // incremental run: new slice only
       out
-    })
+    }
 }

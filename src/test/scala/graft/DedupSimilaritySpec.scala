@@ -102,7 +102,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     // codebook training, encoding, and ADC are all seed-fixed folds —
     // a second full run must reproduce the rows bit-exactly — clear
     // the centroid cache so the rerun genuinely retrains
-    Similarity.clearCentroidCache()
+    graft.sources.CacheRegistry.clear()
     assert(a == rows(Similarity.topKPq(spark, TestSpark.Sf)))
     // reranked cosines bit-match brute force on the shared pairs
     val exact = Similarity.topKBruteForce(spark, TestSpark.Sf)
@@ -123,7 +123,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     assert(recall >= 0.9, s"ivfpq recall $recall")
     // both quantizers are seed-fixed: a second full run (fresh Lloyd +
     // fresh codebooks) must reproduce the rows bit-exactly
-    Similarity.clearCentroidCache()
+    graft.sources.CacheRegistry.clear()
     assert(a == rows(Similarity.topKIvfPq(spark, TestSpark.Sf)))
     // reranked cosines bit-match brute force on the shared pairs
     val exact = Similarity.topKBruteForce(spark, TestSpark.Sf)
@@ -144,7 +144,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     assert(recall >= 0.9, s"ivfpq_res recall $recall")
     // seed-fixed end to end: fresh Lloyd + fresh residual codebooks
     // must reproduce the rows bit-exactly
-    Similarity.clearCentroidCache()
+    graft.sources.CacheRegistry.clear()
     assert(a == rows(Similarity.topKIvfPqResidual(spark, TestSpark.Sf)))
   }
 

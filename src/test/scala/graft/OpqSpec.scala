@@ -116,7 +116,7 @@ class OpqSpec extends AnyFunSuite {
     val got = a.map(r => (r._1, r._2)).toSet
     val recall = (got & gt).size.toDouble / gt.size
     assert(recall >= 0.9, s"opq recall $recall")
-    Similarity.clearCentroidCache() // rerun must genuinely retrain
+    graft.sources.CacheRegistry.clear() // rerun must genuinely retrain
     assert(a == rows(Similarity.topKOpq(spark, TestSpark.Sf)))
   }
 }

@@ -4,9 +4,10 @@ library build; dev tooling only).
 
 Usage: python3 tools/check.py <sfDir> <verifyOutDir>
 
-Reads each <verifyOutDir>/<name>/ parquet (written by graft.Verify),
-runs the paired SQL from oracle_sql.json in DuckDB over the same
-parquet tables, and diff-compares: columns sorted by name, rows sorted,
+For every key in oracle_sql.json, reads <verifyOutDir>/<name>/ parquet
+(written by graft.Verify), runs the paired SQL in DuckDB over the same
+parquet tables, and diff-compares; an oracle key with no output is a
+FAIL. Compare rules: columns sorted by name, rows sorted,
 values compared exactly (floats via repr) — the harshest plausible
 interpretation of the driver's hash compare.
 """
@@ -39,10 +40,17 @@ def main(sf_dir, out_dir):
                         f"event_type, value, props FROM read_parquet('{p}')")
     oracles = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_pass = n_fail = n_noracle = 0
-    for d in sorted(glob.glob(f"{out_dir}/*/")):
-        name = d.rstrip("/").split("/")[-1]
+    # every oracle key is judged, written or not: a key whose query threw
+    # in Verify has no output dir and must count as a FAIL, not vanish
+    outputs = {d.rstrip("/").split("/")[-1] for d in glob.glob(f"{out_dir}/*/")}
+    for name in sorted(outputs | set(oracles)):
+        if name not in outputs:
+            n_fail += 1
+            print(f"  [FAIL] {name}: missing output")
+            continue
         got = pd.concat([pd.read_parquet(f) for f in
-                         sorted(glob.glob(f"{d}/*.parquet"))], ignore_index=True)
+                         sorted(glob.glob(f"{out_dir}/{name}/*.parquet"))],
+                        ignore_index=True)
         if name not in oracles:
             n_noracle += 1
             print(f"  [rows-only] {name}: {len(got)} rows")

@@ -8,18 +8,23 @@
 # control keys from a PINNED OLD WORKTREE in the same window and
 # recording both; box drift then divides out of the comparison.
 #
-# Usage: tools/clean_bench.sh <out.json> [pinned_worktree] [pinned_sha]
-#   pinned_worktree defaults to /tmp/wt_r11 (git worktree add ... b3e3a2d,
-#   pre-compiled). Controls are SSB/relational keys untouched since r8.
+# Usage: tools/clean_bench.sh <out.json> <pinned_worktree> [pinned_sha]
+#   pinned_worktree is a pre-compiled checkout of an older commit (e.g.
+#   `git worktree add /tmp/wt_pin <sha>`). Controls are SSB/relational
+#   keys untouched since r8. SPARK_GRAFT_CPUS defaults to `nproc`; the
+#   value used and `nproc` are recorded in the output JSON.
 set -eu
-OUT=${1:?usage: clean_bench.sh <out.json> [worktree] [sha]}
-WT=${2:-/tmp/wt_r11}
+USAGE="usage: clean_bench.sh <out.json> <pinned_worktree> [sha]"
+OUT=${1:?$USAGE}
+WT=${2:?$USAGE}
 SHA=${3:-$(git -C "$WT" rev-parse --short HEAD)}
 CONTROLS="ssb_q1_1 ssb_q3_3_city_pair rel_market_share rel_brand_top3"
 SF=${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1}
+NPROC=$(nproc)
+CPUS=${SPARK_GRAFT_CPUS:-$NPROC}
 
 echo "[clean_bench] HEAD bench ($(git rev-parse --short HEAD)) on $SF" >&2
-HEAD_LINE=$(SPARK_GRAFT_SF_DIR="$SF" SPARK_GRAFT_CPUS=32 \
+HEAD_LINE=$(SPARK_GRAFT_SF_DIR="$SF" SPARK_GRAFT_CPUS="$CPUS" \
   sbt -batch "runMain graft.Bench" 2>/dev/null | grep '"metric"')
 
 echo "[clean_bench] control keys from pinned worktree $WT ($SHA)" >&2
@@ -28,13 +33,14 @@ echo "[clean_bench] control keys from pinned worktree $WT ($SHA)" >&2
 # would otherwise break the literal and silently corrupt the capture
 CTRL_FILE=$(mktemp /tmp/clean_bench_ctrl.XXXXXX)
 trap 'rm -f "$CTRL_FILE"' EXIT
-(cd "$WT" && SPARK_GRAFT_SF_DIR="$SF" SPARK_GRAFT_CPUS=32 \
+(cd "$WT" && SPARK_GRAFT_SF_DIR="$SF" SPARK_GRAFT_CPUS="$CPUS" \
   SPARK_GRAFT_REPS=2 sbt -batch "runMain graft.BenchOne $CONTROLS" \
   2>/dev/null | grep -E 'rep2:') > "$CTRL_FILE"
 
-python3 - "$OUT" "$SHA" "$CTRL_FILE" <<'EOF'
+python3 - "$OUT" "$SHA" "$CTRL_FILE" "$NPROC" "$CPUS" <<'EOF'
 import json, re, sys
 out, sha, ctrl_file = sys.argv[1], sys.argv[2], sys.argv[3]
+nproc, cpus = int(sys.argv[4]), int(sys.argv[5])
 # the stdout JSON line abbreviates to the slowest keys; the full map is
 # the BENCH_FULL.json the Bench main just wrote into this cwd
 head = json.load(open('BENCH_FULL.json'))
@@ -43,6 +49,8 @@ for line in open(ctrl_file):
     m = re.search(r'(\S+) rep2: ([0-9.]+) s', line)
     if m:
         ctrl[m.group(1)] = float(m.group(2))
+head['nproc'] = nproc
+head['spark_graft_cpus'] = cpus
 head['control'] = {'worktree_sha': sha, 'reps': 'warm (rep2)', 'keys': ctrl,
   'head_same_keys': {k: head['queries'][k] for k in ctrl if k in head.get('queries', {})}}
 with open(out, 'w') as f:
