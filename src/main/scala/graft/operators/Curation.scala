@@ -357,14 +357,16 @@ object Curation extends QueryPack {
     //  - small regime (sub-gate state AND sub-SmallGraphEdgeBytes
     //    edges — the r12 ×100 lesson that state rows say nothing about
     //    edge volume): a state-sized width with AQE OFF for the rounds
-    //    (withAqeOff). The r16 form broadcast the state below the gate
-    //    instead; that pays 2 broadcast-build jobs + an AQE job per
-    //    query stage every round — 31 jobs × 1-2 tasks for 3.0 s of
-    //    summed task time under a 4.1 s wall at sf0.1, nearly pure
-    //    scheduling floor (~0.13 s/job on this box). The co-partitioned
-    //    loop at narrow width with AQE off runs ONE job per round: A/B
-    //    on the same box window (ExpPr, warm) — broadcast/AQE/32:
-    //    4.8-5.3 s, 24 jobs; asserted/aqeOff/8-16: 3.3-3.6 s, 10 jobs.
+    //    planned on a session clone
+    //    (GraftBridge.roundSession). The r16 form broadcast the state
+    //    below the gate instead; that pays 2 broadcast-build jobs + an
+    //    AQE job per query stage every round — 31 jobs × 1-2 tasks for
+    //    3.0 s of summed task time under a 4.1 s wall at sf0.1, nearly
+    //    pure scheduling floor (~0.13 s/job in the r17 job profile). The
+    //    co-partitioned loop at narrow width with AQE off runs ONE job
+    //    per round: A/B on the same box window (warm, OPTIMIZATION_r17.md
+    //    pagerank section) — broadcast/AQE/32: 4.8-5.3 s, 24 jobs;
+    //    asserted/aqeOff/8-16: 3.3-3.6 s, 10 jobs.
     //    (The earlier 4.9 → 8.3 s rejection of the asserted form below
     //    the gate measured it at nPart width WITH AQE on — the width
     //    pin and the job-per-stage cut are what flip the trade.)
@@ -375,9 +377,7 @@ object Curation extends QueryPack {
     // require-crashing a seam r16 accepted.
     val edgesBytes = GraftBridge.checkpointStorageBytesOrUnknown(edges)
     val loopSmall = !giant && edgesBytes <= SmallGraphEdgeBytes
-    val loopW =
-      if (loopSmall) math.max(8, math.min(nPart, (nNodes / 16384L).toInt + 1))
-      else nPart
+    val loopW = if (loopSmall) GraftBridge.stateWidth(spark, nNodes) else nPart
     val withDeg = GraftBridge.localCheckpointHashPartitioned(
       edges.join(degree, "src"), loopW, "src")
     val spreadNodes =
@@ -387,18 +387,21 @@ object Curation extends QueryPack {
     // withDeg and nodes are materialized: an owned edge checkpoint has
     // served its purpose — free it before the rounds run, not after
     if (edgesOwned) GraftBridge.releaseLocalCheckpoint(edges)
+    // below the gate the rounds plan on a session clone
+    val rounds = if (loopSmall) GraftBridge.roundSession(spark, loopW) else spark
+    val roundDeg = GraftBridge.onSession(rounds, withDeg)
+    val roundNodes = GraftBridge.onSession(rounds, nodes)
     def gatedState(s: DataFrame): DataFrame = s.hint("shuffle_hash")
-    var ranks = nodes.select(col("id"), lit(Fp).as("rank"))
+    var ranks = roundNodes.select(col("id"), lit(Fp).as("rank"))
     var ranksOwned = false
-    withAqeOff(spark, loopSmall, loopW) {
     for (_ <- 1 to PrIters) {
-      val contribs = withDeg
+      val contribs = roundDeg
         .join(gatedState(ranks), col("src") === col("id"))
         .select(col("dst").as("id"), expr("rank div deg").as("c"))
         .groupBy(col("id")).agg(sum(col("c")).as("s"))
       // 0.15 + 0.85·s in pure long arithmetic: 85·s div 100 (s ≤ N·Fp —
       // headroom: 85·10¹⁶ ≈ 8.5·10¹⁷ < 2⁶³ even at 10k× the fixture)
-      val stepped = nodes.join(gatedState(contribs), Seq("id"), "left")
+      val stepped = roundNodes.join(gatedState(contribs), Seq("id"), "left")
         .select(col("id"),
           (lit(15L * Fp / 100) +
             expr(s"85 * coalesce(s, 0L) div 100")).as("rank"))
@@ -408,13 +411,12 @@ object Curation extends QueryPack {
       ranks = next
       ranksOwned = true
     }
-    }
     // the result depends only on the final ranks checkpoint — the loop
     // inputs are dead weight from here; free them deterministically
     // (Dataset.unpersist is a CacheManager no-op for checkpoints)
     GraftBridge.releaseLocalCheckpoint(withDeg)
     GraftBridge.releaseLocalCheckpoint(nodes)
-    ranks.select(col("id"),
+    GraftBridge.onSession(spark, ranks).select(col("id"),
       (col("rank").cast("double") / Fp.toDouble).as("rank"))
   }
 
@@ -495,7 +497,8 @@ object Curation extends QueryPack {
     // of a generic row map — the whole chain (partitioned SMJ semi →
     // broadcast BHJs + packed key + explicit re-spread) measured
     // 35 s → ~6 s warm at sf0.1, with the remaining cost split between
-    // the edge-build distinct and the 41M-row wedge stream (ProfTri).
+    // the edge-build distinct and the 41M-row wedge stream (SCALE.md,
+    // "Graph family at ×100 (round 9)").
     // Node ids must fit 32 bits —
     // true of any catalog-keyed graph; a wider id space would pack into
     // two longs. On a graph whose EDGE set outgrows executor memory,
@@ -567,7 +570,6 @@ object Curation extends QueryPack {
     // the unpersist, R rounds pin R copies of O(|E|) (the ×100 OOM).
     val (core0, nEdges0) = GraftBridge.localCheckpointCounted(e0)
     var core = core0
-    var coreOwned = true
     // Lower-median initial degree from the count-of-counts histogram.
     // The cumulative walk runs as a WINDOW over the histogram rows and
     // only the 1-row answer reaches the driver: #distinct degree
@@ -606,17 +608,17 @@ object Curation extends QueryPack {
     //    collapses them — the communitiesOf device;
     //  - the shrunken edge list's checkpoint and the fixpoint count
     //    ride ONE job (GraftBridge.localCheckpointCounted);
-    //  - AQE is off for the rounds below the gate (withAqeOff): every
-    //    join is hint-decided and the degree aggregate's width is
-    //    nPart either way, so AQE only added one job per query stage.
+    //  - below the gate the rounds plan on a session clone with
+    //    AQE off and a state-sized shuffle width
+    //    (GraftBridge.roundSession): every join is hint-decided, so AQE
+    //    only added one job per query stage.
     // Measured at sf0.1 (BenchOne warm, same box window): see
     // OPTIMIZATION_r17.md (kcore section).
     val sess = core.sparkSession
-    val nPartK = sess.sessionState.conf.numShufflePartitions
-    val loopSmall = total <= stateBroadcastMaxRows &&
-      GraftBridge.checkpointStorageBytes(core) <= SmallGraphEdgeBytes
-    withAqeOff(sess, loopSmall,
-      math.max(4, math.min(nPartK, (total / 16384L).toInt + 1))) {
+    if (total <= stateBroadcastMaxRows &&
+        GraftBridge.checkpointStorageBytes(core) <= SmallGraphEdgeBytes)
+      core = GraftBridge.onSession(
+        GraftBridge.roundSession(sess, GraftBridge.stateWidth(sess, total)), core)
     while (!converged && rounds < KCoreMaxRounds) {
       val keep = gatedKeep(
         degrees(core).filter(col("deg") >= k).select(col("id")))
@@ -625,13 +627,11 @@ object Curation extends QueryPack {
         .join(keep.as("kv"), col("v") === col("kv.id"), "left_semi"))
       converged = n == nEdges
       nEdges = n
-      if (coreOwned) GraftBridge.releaseLocalCheckpoint(core)
+      GraftBridge.releaseLocalCheckpoint(core)
       core = next
-      coreOwned = true
       rounds += 1
     }
-    }
-    degrees(core)
+    degrees(GraftBridge.onSession(sess, core))
       .select(col("id"), col("deg").as("core_deg"), lit(k).as("k"))
       .orderBy(col("core_deg").desc, col("id"))
   }
@@ -1050,16 +1050,7 @@ object Curation extends QueryPack {
   /** LPA over a simple undirected edge list (u < v, distinct);
     * returns (community, n_nodes) with community = the shared label.
     * `stateBroadcastMaxRows` gates the node-set broadcasts (tests
-    * force 0 to exercise the all-shuffle giant-graph path).
-    *
-    * INVARIANT — sequential execution only: the sub-gate round loop
-    * toggles the SESSION-global `spark.sql.adaptive.enabled` for its
-    * duration (restored in a finally), so any query planned
-    * concurrently on the same SparkSession would silently run with
-    * AQE off. Every in-library caller (Verify/Bench/forked tests) is
-    * sequential; a re-entrancy guard below fails loudly if two
-    * AQE-toggling loops ever overlap rather than corrupting each
-    * other's restore value. */
+    * force 0 to exercise the all-shuffle giant-graph path). */
   private[graft] def communitiesOf(e0: DataFrame,
       stateBroadcastMaxRows: Long = StateBroadcastMaxRows): DataFrame = {
     val nPart = e0.sparkSession.sessionState.conf.numShufflePartitions
@@ -1103,9 +1094,7 @@ object Curation extends QueryPack {
     // regression before this)
     val undBytes = GraftBridge.checkpointStorageBytes(und)
     val small = nNodes <= stateBroadcastMaxRows && undBytes <= SmallGraphEdgeBytes
-    val votePart =
-      if (!small) nPart
-      else math.max(8, math.min(nPart, (nNodes / 16384L).toInt + 1))
+    val votePart = if (small) GraftBridge.stateWidth(e0.sparkSession, nNodes) else nPart
     if (nNodes > stateBroadcastMaxRows) {
       val spread = GraftBridge.localCheckpointHashPartitioned(und, nPart, "dst")
       GraftBridge.releaseLocalCheckpoint(und)
@@ -1141,29 +1130,17 @@ object Curation extends QueryPack {
     // driver round trip per round — 54 jobs for <1 s of executor
     // compute at sf0.1, job-count-profiled). AQE buys nothing on
     // sub-gate state (all joins are already hint-decided broadcasts,
-    // widths are set explicitly above), so the rounds run with it OFF
-    // and each round collapses to checkpoint-job + count-job. The
-    // giant path keeps AQE (skew joins, runtime re-plan). Sequential
-    // execution contexts only (Verify/Bench/forked tests) — restored
-    // in the finally.
+    // widths are set explicitly above), so the rounds plan on a
+    // session clone with it OFF (GraftBridge.roundSession, at
+    // the caller's width: the unrepartitioned tail-round exchanges keep
+    // nPart) and each round collapses to checkpoint-job + count-job.
+    // The giant path keeps AQE (skew joins, runtime re-plan).
     val sess = und.sparkSession
-    val aqePrev = sess.conf.get("spark.sql.adaptive.enabled", "true")
     if (small) {
-      // re-entrancy guard for the session-global toggle (see the
-      // entry-point invariant): overlapping loops on the SAME session
-      // would restore a mid-toggle "previous" value — fail loudly
-      // instead. Keyed by sessionUUID, not JVM-global: two sequential
-      // loops on two different sessions in one JVM (parallel suites)
-      // touch disjoint session configs and must not trip each other.
-      // Scope honesty: this protects against overlapping TOGGLERS only;
-      // a concurrent non-toggling reader on the same session still
-      // silently plans with AQE off for the toggle window.
-      require(aqeToggleSessions.add(GraftBridge.sessionUUID(sess)),
-        "communitiesOf: concurrent AQE-toggling round loops on one " +
-          "session — the sub-gate path requires sequential execution")
-      sess.conf.set("spark.sql.adaptive.enabled", "false")
+      val rounds = GraftBridge.roundSession(sess, nPart)
+      und = GraftBridge.onSession(rounds, und)
+      labels = GraftBridge.onSession(rounds, labels)
     }
-    try {
     while (r < LpaRounds && !done) {
       // a round recomputes every node when the frontier spans most of
       // the graph (the semi-join filters would pass nearly everything;
@@ -1337,60 +1314,8 @@ object Curation extends QueryPack {
       .agg(count(lit(1)).as("n_nodes"))
       .localCheckpoint()
     (owned :+ und).foreach(GraftBridge.releaseLocalCheckpoint)
-    result.orderBy(col("community"))
-    } finally {
-      if (small) {
-        sess.conf.set("spark.sql.adaptive.enabled", aqePrev)
-        aqeToggleSessions.remove(GraftBridge.sessionUUID(sess))
-      }
-    }
+    GraftBridge.onSession(sess, result).orderBy(col("community"))
   }
-
-  /** Sessions currently holding an AQE round-loop toggle
-    * ([[communitiesOf]] inline, [[withAqeOff]] for the other iterative
-    * loops) — the re-entrancy guard is per SparkSession (the unit the
-    * config toggle actually mutates), not JVM-global. */
-  private val aqeToggleSessions =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** Run `body` with AQE disabled on `sess` when `arm` is true — the
-    * [[communitiesOf]] small-regime lever shared by the other iterative
-    * round loops (k-core peel, sub-gate pageRank): when the per-round
-    * state is broadcast-gated and every exchange width is already
-    * decided explicitly, AQE buys nothing but splits each round's
-    * materialization into one job per query stage — pure scheduling
-    * floor at the small tier (r17 job profile: the floor is ~0.13 s/job
-    * on this box and the sub-gate rounds are 1-2 task jobs). Same
-    * sequential-execution invariant and re-entrancy guard as
-    * [[communitiesOf]]'s inline toggle; restored in a finally. */
-  private def withAqeOff[T](sess: SparkSession, arm: Boolean,
-      shufflePartitions: Int = 0)(body: => T): T =
-    if (!arm) body
-    else {
-      val prevAqe = sess.conf.get("spark.sql.adaptive.enabled", "true")
-      val prevPart = sess.conf.get("spark.sql.shuffle.partitions")
-      require(aqeToggleSessions.add(GraftBridge.sessionUUID(sess)),
-        "withAqeOff: concurrent AQE-toggling round loops on one session " +
-          "— the sub-gate paths require sequential execution")
-      try {
-        sess.conf.set("spark.sql.adaptive.enabled", "false")
-        // With AQE off nothing coalesces the round's reduce sides, so
-        // width defaults to the session's nPart — 32 near-empty tasks
-        // per exchange at the sub-gate tier, whose launch overhead ate
-        // the jobs saved (measured: pagerank 31 → 24 jobs but tasks
-        // 31 → 184 and wall +0.6 s). Pin the loop's reduce width to a
-        // state-sized count instead (the communitiesOf votePart
-        // formula); partition width never changes any result here —
-        // the loops are partitioning-independent by design.
-        if (shufflePartitions > 0)
-          sess.conf.set("spark.sql.shuffle.partitions", shufflePartitions)
-        body
-      } finally {
-        sess.conf.set("spark.sql.adaptive.enabled", prevAqe)
-        sess.conf.set("spark.sql.shuffle.partitions", prevPart)
-        aqeToggleSessions.remove(GraftBridge.sessionUUID(sess))
-      }
-    }
 
   /** Corpus concentration report: the Gini coefficient of per-doc
     * token counts plus the share held by the largest 1% of documents —

@@ -995,7 +995,6 @@ object Events extends QueryPack {
   def rfm(spark: SparkSession, dir: String): DataFrame = {
     val perUser = rfmPerUser(spark, dir)
     val horizon = perUser.agg(max(col("last_day")).as("horizon_day"))
-    val nPart = spark.sessionState.conf.numShufflePartitions
     val base0 = perUser.join(broadcast(horizon))
       .withColumn("recency_days", col("horizon_day") - col("last_day"))
       .select(col("user_id"), col("recency_days"), col("frequency"),
@@ -1003,12 +1002,12 @@ object Events extends QueryPack {
     // one fused checkpoint+count job: the three rank passes below then
     // scan this frame instead of re-running the event-stream aggregate
     // inside every range-sampling and shuffle job, and the count sizes
-    // the rank width scale-adaptively (the votePart pattern: conf-
-    // bounded above, floor 8 — at fixture |users| the passes run 8-wide
-    // instead of paying 3 × nPart near-empty tasks per stage)
+    // the rank width scale-adaptively (GraftBridge.stateWidth — at
+    // fixture |users| the passes run 8-wide instead of paying
+    // 3 × nPart near-empty tasks per stage)
     import org.apache.spark.sql.GraftBridge
     val (base, nUsers) = GraftBridge.localCheckpointCounted(base0)
-    val w = math.max(8, math.min(nPart, (nUsers / 16384L).toInt + 1))
+    val w = GraftBridge.stateWidth(spark, nUsers)
     import graft.plans.ExactRank
     val (r1, n) = ExactRank.withRank(base, w,
       Seq(col("recency_days"), col("user_id")), "r_rnk")

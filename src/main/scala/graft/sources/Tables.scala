@@ -30,7 +30,14 @@ object Tables {
   def part(spark: SparkSession, dir: String): DataFrame       = read(spark, dir, "part")
   def orders(spark: SparkSession, dir: String): DataFrame     = read(spark, dir, "orders")
   def lineitem(spark: SparkSession, dir: String): DataFrame   = read(spark, dir, "lineitem")
-  /** `events.ts` has shipped as two physical types across fixture
+  def events(spark: SparkSession, dir: String): DataFrame =
+    eventsAt(spark, s"$dir/events.parquet")(identity)
+
+  /** Event parquet at `path` with `ts` normalized; `load` turns the
+    * batch scan into the frame to normalize (the streaming twin reads
+    * the same files as a stream with the batch scan's schema).
+    *
+    * `events.ts` has shipped as two physical types across fixture
     * generations: TIMESTAMP(NANOS) — which Spark 4's vectorized reader
     * refuses, so it is read as raw nanos (legacy conf) and rebuilt —
     * and plain TIMESTAMP(MICROS, isAdjustedToUTC=false), which arrives
@@ -39,15 +46,16 @@ object Tables {
     * consumer (and the UTC-pinned DuckDB oracle) expects; the branch is
     * on the READ schema, so either fixture generation loads
     * identically. */
-  def events(spark: SparkSession, dir: String): DataFrame = {
+  def eventsAt(spark: SparkSession, path: String)(
+      load: DataFrame => DataFrame): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = read(spark, dir, "events")
+    val raw = spark.read.parquet(path)
     val ts = raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         expr("timestamp_micros(ts div 1000)")
       case _ => expr("cast(ts as timestamp)")
     }
-    raw.withColumn("ts", ts)
+    load(raw).withColumn("ts", ts)
   }
   /** Every data file under `dir/name.parquet`, recursively (nested
     * `part=…/` directories included), through the Hadoop `FileSystem`

@@ -4,7 +4,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import org.apache.spark.sql.types.StructType
 
 /** Structured Streaming re-expression of the [[graft.operators.Events]]
   * batch operators: the same event-time windows and sessionization,
@@ -46,17 +45,9 @@ object EventStream {
   /** Streaming scan of a DIRECTORY of event parquet files (the file
     * stream source requires a directory; new files appended to it become
     * new micro-batches — the production shape). */
-  def readEvents(spark: SparkSession, eventsDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw: StructType = spark.read.parquet(eventsDir).schema
-    // same two-generation ts normalization as Tables.events: raw int64
-    // nanos (legacy TIMESTAMP(NANOS) fixtures) vs TIMESTAMP_NTZ µs
-    val ts =
-      if (raw("ts").dataType == org.apache.spark.sql.types.LongType)
-        expr("timestamp_micros(ts div 1000)")
-      else expr("cast(ts as timestamp)")
-    spark.readStream.schema(raw).parquet(eventsDir).withColumn("ts", ts)
-  }
+  def readEvents(spark: SparkSession, eventsDir: String): DataFrame =
+    graft.sources.Tables.eventsAt(spark, eventsDir)(
+      batch => spark.readStream.schema(batch.schema).parquet(eventsDir))
 
   /** Streaming 6-hour tumbling windows per event type with a 1-day
     * watermark — the incremental form of `Events.tumbling`. */

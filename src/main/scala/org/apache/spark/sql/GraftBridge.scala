@@ -18,14 +18,73 @@ object GraftBridge {
       spark.asInstanceOf[classic.SparkSession], plan)
 
   /** Stable per-session identity (`classic.SparkSession.sessionUUID` is
-    * not surfaced on the abstract API class) — used to key per-session
-    * guards. */
+    * not surfaced on the abstract API class) — keys the per-session
+    * cache entries. */
   def sessionUUID(spark: SparkSession): String =
     spark.asInstanceOf[classic.SparkSession].sessionUUID
 
   /** The analyzed logical plan under a DataFrame. */
   def planOf(df: DataFrame): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.queryExecution.analyzed
+
+  /** `df` as a frame of `spark`: the same analyzed plan, planned and
+    * executed under `spark`'s conf from here on. */
+  def onSession(spark: SparkSession, df: DataFrame): DataFrame =
+    if (df.sparkSession eq spark) df else ofRows(spark, planOf(df))
+
+  /** A session for iterative round loops, with AQE off and `width`
+    * shuffle partitions. `cloneSession` copies the caller's runtime
+    * conf, query-execution listeners, extensions and job tags and shares
+    * its SparkContext and cache manager; only the clone's conf is
+    * written, so queries planned concurrently on the caller's session
+    * never see the loop's settings. Frames moved onto it with
+    * [[onSession]] plan every round, and every frame derived from them,
+    * under that conf.
+    *
+    * Why AQE off: below the broadcast gate every round join is
+    * hint-decided and every width is set here or explicitly, so AQE
+    * buys nothing but splits each round's materialization into one job
+    * per query stage — pure scheduling floor when the rounds are 1-2
+    * task jobs (r17 job profile: ~0.13 s per job). With AQE off nothing
+    * coalesces the reduce sides, hence the explicit state-sized `width`
+    * ([[stateWidth]]): at the session's nPart the saved jobs were eaten
+    * by near-empty tasks (pagerank: 31 → 24 jobs, but 31 → 184 tasks and
+    * +0.6 s wall).
+    *
+    * A clone is reused while the caller's conf, listeners and job tags
+    * are what they were when it was made: it is never written after
+    * that, so concurrent loops can share it. A fresh clone per loop
+    * would recompile every generated class of the loop, because Spark
+    * gives each session UUID its own executor class loader and keys
+    * its codegen cache by class loader. */
+  def roundSession(spark: SparkSession, width: Int): SparkSession = {
+    val caller = spark.asInstanceOf[classic.SparkSession]
+    val key = (caller.sessionUUID, width, caller.conf.getAll,
+      caller.listenerManager.listListeners().toSeq, caller.getTags())
+    roundSessions.synchronized(roundSessions.computeIfAbsent(key, _ => {
+      val clone = caller.cloneSession()
+      clone.conf.set("spark.sql.adaptive.enabled", "false")
+      clone.conf.set("spark.sql.shuffle.partitions", width)
+      clone
+    }))
+  }
+
+  /** The most recently used round sessions, least recent evicted first. */
+  private val roundSessions =
+    new java.util.LinkedHashMap[AnyRef, SparkSession](16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[AnyRef, SparkSession]): Boolean = size > 16
+    }
+
+  /** Shuffle width for a stage over `rows` rows of per-node or per-user
+    * state: one partition per 16384 rows, capped at the session's
+    * `spark.sql.shuffle.partitions` and never below 8. Tiny state then
+    * runs a few tasks instead of nPart near-empty ones, and large state
+    * keeps the configured width. The loops that use it are
+    * partitioning-independent by design, so the width never changes a
+    * result. */
+  def stateWidth(spark: SparkSession, rows: Long): Int = math.max(8,
+    math.min(spark.sessionState.conf.numShufflePartitions, (rows / 16384L).toInt + 1))
 
   /** Drain the listener bus — `QueryExecutionListener` callbacks are
     * asynchronous, so plan-capturing tests must flush before

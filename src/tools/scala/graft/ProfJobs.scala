@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
 /** Dev-only structural profiler: run a query warm and report the job /
   * stage / summed-task-time footprint — deterministic where wall-clock
   * is ±15% box noise (the round-11 A/B lesson). Not part of the
-  * library surface; same pattern as ProfLpa/ProfIvf. */
+  * library surface; same pattern as ProfIvf. */
 object ProfJobs {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
