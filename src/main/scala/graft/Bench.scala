@@ -2,8 +2,6 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): one warmup pass per query (JIT +
   * whole-stage-codegen compilation + page-cache warm), then
   * SPARK_GRAFT_REPS timed passes (default 3), reported as ONE JSON line
@@ -35,22 +33,14 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
     val warmup = sys.env.getOrElse("SPARK_GRAFT_BENCH_WARMUP", "1") != "0"
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+    val spark = GraftSession.local(GraftSession.cpus,
       // let AQE coalesce below the parallelism floor: at bench SFs the
       // shuffles are far under one advisory partition, and 32 near-empty
       // tasks per stage cost more than the work itself (at production SF
       // partitions hit the advisory size and none of this kicks in)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false")
     val queries = SparkEntry.queries.toSeq.sortBy(_._1)
     if (warmup) queries.foreach { case (_, fn) =>
       try fn(spark, sfDir).count() catch { case _: Throwable => () }

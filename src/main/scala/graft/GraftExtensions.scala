@@ -7,8 +7,8 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 /** Session extensions for the engine — activate with
-  * `spark.sql.extensions=graft.GraftExtensions` (done by Verify/Bench
-  * and the test session): injects the [[DateRangeRewrite]] optimizer
+  * `spark.sql.extensions=graft.GraftExtensions` (done by
+  * [[GraftSession]]): injects the [[DateRangeRewrite]] optimizer
   * rule and registers `graft_dot` as a first-class SQL function. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {

@@ -996,10 +996,12 @@ object Curation extends QueryPack {
     * broadcast-build chaining (each hop's ~|V|-row label build is one
     * small driver-side job step) for fewer checkpoint round trips —
     * the co-purchase fixture converges in 2 materializations instead
-    * of 4 (ProfJobs: see OPTIMIZATION_r18.md; a mid-batch fixpoint is
-    * self-healing, so over-shooting the convergence round by up to 3
-    * hops costs only sub-gate-sized in-job votes). The giant path is
-    * untouched — there a vote is real work and never batched. */
+    * of 4 (OPTIMIZATION_r18.md; job counts from `perfbench/run.py
+    * --workload catalog_serial --keys cur_communities --trace 1`; a
+    * mid-batch fixpoint is self-healing, so over-shooting the
+    * convergence round by up to 3 hops costs only sub-gate-sized in-job
+    * votes). The giant path is untouched — there a vote is real work
+    * and never batched. */
   private val LpaBatchHops = 4
 
   /** `cur_communities`: community detection on the co-purchase graph

@@ -14,15 +14,8 @@ import graft.sources.SyntheticEmbeddings
 object Ann2m {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(2000000L)
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cpus,
+      "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false")
     import spark.implicits._
     def time[T](label: String)(f: => T): T = {
       val t0 = System.nanoTime(); val r = f

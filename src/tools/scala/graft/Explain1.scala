@@ -1,8 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: execute one query key at a given SF dir (default sf0.1) and
-  * dump its physical plan — the `.explain` companion to [[PlanAudit]]'s
+  * dump its physical plan — the `.explain` companion to `PlanAuditSpec`'s
   * red-flag sweep, for single-query plan iteration and the
   * per-round `plans/` before/after artifacts.
   *
@@ -13,12 +12,7 @@ import org.apache.spark.sql.SparkSession
   * post-AQE operator tree with reused-exchange markers). */
 object Explain1 {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(GraftSession.cpus)
     val df = SparkEntry.queries(args(0))(spark,
       args.lift(1).getOrElse("/root/testdata/sf0.1"))
     df.collect()

@@ -1,26 +1,17 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
 /** Dev-only census: execute every query key once and report plans that
   * contain DUPLICATE canonicalized Generate subtrees — the
   * pruning-vs-ReuseExchange trap (a corpus explode pass that runs more
-  * than once per invocation). Companion to PlanAudit's red-flag sweep. */
+  * than once per invocation). Companion to PlanAuditSpec's red-flag sweep. */
 object PlanScan {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(GraftSession.cpus,
+      "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false")
     def finalPlan(p: SparkPlan): SparkPlan = p match {
       case a: AdaptiveSparkPlanExec => a.executedPlan
       case other => other

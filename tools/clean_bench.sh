@@ -11,8 +11,11 @@
 # Usage: tools/clean_bench.sh <out.json> <pinned_worktree> [pinned_sha]
 #   pinned_worktree is a pre-compiled checkout of an older commit (e.g.
 #   `git worktree add /tmp/wt_pin <sha>`). Controls are SSB/relational
-#   keys untouched since r8. SPARK_GRAFT_CPUS defaults to `nproc`; the
-#   value used and `nproc` are recorded in the output JSON.
+#   keys untouched since r8. The controls are timed with the pin's own
+#   `graft.BenchOne`, which was removed from the tree later: the pin must
+#   be a commit that still has src/main/scala/graft/BenchOne.scala, or
+#   the script exits 2. SPARK_GRAFT_CPUS defaults to `nproc`; the value
+#   used and `nproc` are recorded in the output JSON.
 set -eu
 USAGE="usage: clean_bench.sh <out.json> <pinned_worktree> [sha]"
 OUT=${1:?$USAGE}
@@ -22,6 +25,11 @@ CONTROLS="ssb_q1_1 ssb_q3_3_city_pair rel_market_share rel_brand_top3"
 SF=${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1}
 NPROC=$(nproc)
 CPUS=${SPARK_GRAFT_CPUS:-$NPROC}
+if [ ! -f "$WT/src/main/scala/graft/BenchOne.scala" ]; then
+  echo "[clean_bench] $WT has no src/main/scala/graft/BenchOne.scala:" \
+    "the pinned worktree must predate BenchOne's removal" >&2
+  exit 2
+fi
 
 echo "[clean_bench] HEAD bench ($(git rev-parse --short HEAD)) on $SF" >&2
 HEAD_LINE=$(SPARK_GRAFT_SF_DIR="$SF" SPARK_GRAFT_CPUS="$CPUS" \
