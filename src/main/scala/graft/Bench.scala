@@ -15,7 +15,8 @@ import java.nio.file.{Files, Paths}
   * values at millisecond precision, and if the per-query map still
   * overflows, only the slowest queries stay inline (count in
   * `queries_omitted`). The COMPLETE per-query map is always written to
-  * `BENCH_FULL.json` in the working directory.
+  * `target/BENCH_FULL.json` under the working directory, outside the
+  * tracked tree.
   *
   * `floor` is the per-query session overhead (median timed `count()` on
   * a 1-row in-memory plan: planning + job scheduling + task launch), so
@@ -154,8 +155,9 @@ object Bench {
         s""""n_queries":${results.size},""" +
         s""""queries_omitted":$omitted,"queries":${qmap(rs)},""" +
         s""""errors":$errs,"sf":${jstr(sfDir)}}"""
-    Files.write(Paths.get("BENCH_FULL.json"),
-      line(results, 0, full = true).getBytes(StandardCharsets.UTF_8))
+    val record = Paths.get("target", "BENCH_FULL.json")
+    Files.createDirectories(record.getParent)
+    Files.write(record, line(results, 0, full = true).getBytes(StandardCharsets.UTF_8))
     // shrink the stdout line to the tail-capture budget: drop the fastest
     // queries first (the slow ones are the ones worth reading inline)
     val bySlow = results.sortBy { case (_, v, _) => -v }

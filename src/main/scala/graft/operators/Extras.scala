@@ -187,7 +187,7 @@ object Extras extends QueryPack {
     * same rollup from the raw five-way join, so a pass proves the
     * write→read round trip preserved every contributing column. */
   def starMaterializedRollup(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(Star.materializedPath(spark, dir))
+    Tables.open(spark, Star.materializedPath(spark, dir))
       .groupBy(year(col("o_orderdate")).cast("long").as("o_year"),
         col("c_mktsegment"))
       .agg(count(lit(1)).as("n"),
@@ -237,7 +237,7 @@ object Extras extends QueryPack {
     * slice appended by a second run, read back and rolled up — the
     * oracle recomputes from the raw join, proving incremental == full. */
   def starIncrementalRollup(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(Star.incrementalPath(spark, dir))
+    Tables.open(spark, Star.incrementalPath(spark, dir))
       .groupBy(year(col("o_orderdate")).cast("long").as("o_year"))
       .agg(count(lit(1)).as("n"),
         sum(dec(col("l_extendedprice") * (lit(1) - col("l_discount"))))
@@ -249,7 +249,7 @@ object Extras extends QueryPack {
     * other year's directories before any IO (spec-pinned). Oracle
     * recomputes from the raw join with the same predicate. */
   def starPartitionPruned(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(Star.partitionedPath(spark, dir))
+    Tables.open(spark, Star.partitionedPath(spark, dir))
       .filter(col("order_year") === 1996)
       .groupBy(col("c_mktsegment"))
       .agg(count(lit(1)).as("n"),

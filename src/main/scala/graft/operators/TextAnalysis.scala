@@ -88,15 +88,12 @@ object TextAnalysis extends QueryPack {
     * the span-gram frames that needed DISK_ONLY. */
   private def tokenizedDocs(spark: SparkSession, dir: String): DataFrame =
     CacheRegistry.getOrBuild(spark, dir, "tokens", "documents")(
-      tokenizedOf(Tables.documents(spark, dir).toDF()).localCheckpoint(true,
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
-
-  /** The tokenize projection itself — inlined (uncached) by the `*Of`
-    * test seams so spec inputs need no session cache. */
-  private[graft] def tokenizedOf(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"),
-      expr(s"cast(size($toks) as bigint)").as("dl"),
-      expr(toks).as("toks"))
+      Tables.documents(spark, dir).toDF()
+        .select(col("doc_id"),
+          expr(s"cast(size($toks) as bigint)").as("dl"),
+          expr(toks).as("toks"))
+        .localCheckpoint(true,
+          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
 
   /** BM25 top-k retrieval (Robertson/Spärck Jones; k1 = 1.2, b = 0.75)
     * in EXACT integer arithmetic, so the ranking is oracle-paired where
@@ -131,13 +128,8 @@ object TextAnalysis extends QueryPack {
     * corpus stats; the query side is a 5-row broadcast; the only
     * per-match work is the final (query_id, doc) partial-agg +
     * per-query top-k window over matched docs only. */
-  def bm25TopK(spark: SparkSession, dir: String): DataFrame =
-    bm25TopKOnToks(tokenizedDocs(spark, dir))
-
-  private[graft] def bm25TopKOf(docs: DataFrame): DataFrame =
-    bm25TopKOnToks(tokenizedOf(docs))
-
-  private def bm25TopKOnToks(tok: DataFrame): DataFrame = {
+  def bm25TopK(spark: SparkSession, dir: String): DataFrame = {
+    val tok = tokenizedDocs(spark, dir)
     import graft.functions.FixedLog2
     val tf = tok
       .select(col("doc_id"), col("dl"), explode(col("toks")).as("token"))
@@ -220,13 +212,8 @@ object TextAnalysis extends QueryPack {
     * aggregate — tf/df run at matched-rows grain, never vocab×P grain
     * (the full positional index is the substring family's job; a
     * retrieval query only ever needs its own phrases' postings). */
-  def bm25Phrase(spark: SparkSession, dir: String): DataFrame =
-    bm25PhraseOnToks(tokenizedDocs(spark, dir))
-
-  private[graft] def bm25PhraseOf(docs: DataFrame): DataFrame =
-    bm25PhraseOnToks(tokenizedOf(docs))
-
-  private def bm25PhraseOnToks(tok: DataFrame): DataFrame = {
+  def bm25Phrase(spark: SparkSession, dir: String): DataFrame = {
+    val tok = tokenizedDocs(spark, dir)
     import graft.functions.FixedLog2
     val P = PhraseLen
     val grams = tok.filter(col("dl") >= P)
@@ -242,7 +229,7 @@ object TextAnalysis extends QueryPack {
     val tf = gq.groupBy(col("doc_id"), col("dl"), col("phrase"))
       .agg(count(lit(1)).as("tf"))
     // df rides a window over tf — single structural reference to the
-    // gram pass, not reuse-dependent (see bm25TopKOnToks; an
+    // gram pass, not reuse-dependent (see bm25TopK; an
     // always-true-filter ReuseExchange variant was tried first and lost
     // the AQE twin-stage race on some runs)
     val tfd = FixedLog2.withLog2(
@@ -303,13 +290,8 @@ object TextAnalysis extends QueryPack {
     * values because the prune is term-complete (every row of a kept
     * term survives). The lag window partitions by (query, doc) —
     * thousands of small partitions, never one global sort. */
-  def bm25Proximity(spark: SparkSession, dir: String): DataFrame =
-    bm25ProximityOnToks(tokenizedDocs(spark, dir))
-
-  private[graft] def bm25ProximityOf(docs: DataFrame): DataFrame =
-    bm25ProximityOnToks(tokenizedOf(docs))
-
-  private def bm25ProximityOnToks(tok: DataFrame): DataFrame = {
+  def bm25Proximity(spark: SparkSession, dir: String): DataFrame = {
+    val tok = tokenizedDocs(spark, dir)
     import graft.functions.FixedLog2
     // the 5-row query frame feeds four plan sites (the qtok semi-join
     // build twice, qterms twice) and each reference re-ran the corpus
@@ -332,7 +314,7 @@ object TextAnalysis extends QueryPack {
     // each doc appears once per token in tf, so count over
     // partitionBy(token) IS the doc frequency — same integers. The
     // branch form re-ran the full posexplode corpus pass (here, unlike
-    // the bm25TopKOnToks twins, the always-true-guard trick did NOT
+    // the bm25TopK twins, the always-true-guard trick did NOT
     // restore exchange reuse — the two copies of the semi-join subtree
     // kept materializing as separate AQE stages), so the key paid three
     // 32-task corpus scans per invocation; the window replaces one of

@@ -11,9 +11,14 @@ import org.apache.spark.sql.{Dataset, GraftBridge, SparkSession}
   * Frames (eager `localCheckpoint`s) and driver-side values (centroids,
   * merge tables, span lengths, materialized star paths) share it.
   *
-  *  - An entry is keyed by (session UUID, dir, tag). The UUID string, not
-  *    the session object, so a key never pins a stopped session.
-  *  - Each entry records the [[Tables.fingerprint]] of the tables it was
+  *  - An entry lives in one of two scopes. A session entry is keyed by
+  *    (session UUID, dir, tag): the UUID string, not the session object,
+  *    so a key never pins a stopped session. A JVM entry is keyed by
+  *    (path, tag) and is shared by every session; it holds only a
+  *    plain value derived from the files and the conf named in its tag
+  *    (a parquet schema), never a frame, which is bound to the session
+  *    that built it.
+  *  - Each entry records the [[Tables.fingerprint]] of the files it was
   *    built from. A lookup whose fingerprint differs rebuilds the value
   *    and releases the superseded checkpoint, so a rewrite of the corpus
   *    on any Hadoop filesystem invalidates without an explicit clear.
@@ -25,7 +30,11 @@ import org.apache.spark.sql.{Dataset, GraftBridge, SparkSession}
   */
 object CacheRegistry {
 
-  private final case class Key(session: String, dir: String, tag: String)
+  private final case class Key(scope: String, dir: String, tag: String)
+
+  /** The scope of the entries every session shares; no session UUID
+    * equals it. */
+  private val Jvm = "jvm"
 
   private final class Entry(val fingerprint: String) {
     val value = new CompletableFuture[Any]
@@ -41,6 +50,14 @@ object CacheRegistry {
       tables: String*)(build: => T): T =
     lookup(Key(GraftBridge.sessionUUID(spark), dir, tag),
       Tables.fingerprint(spark, dir, tables: _*), () => build)
+
+  /** The JVM-wide value for `tag` over the files at `path`, built by
+    * `build` when absent or when those files changed since it was
+    * built. `build` must return a plain value that depends only on
+    * those files and on what `tag` names, never a frame. */
+  private[graft] def getOrBuildForJvm[T](spark: SparkSession, path: String,
+      tag: String)(build: => T): T =
+    lookup(Key(Jvm, path, tag), Tables.pathFingerprint(spark, path), () => build)
 
   @annotation.tailrec
   private def lookup[T](key: Key, fingerprint: String, build: () => T): T = {
@@ -83,7 +100,8 @@ object CacheRegistry {
       if (e != null) e.value.thenAccept(v => release(v))
     }
 
-  /** Builds run so far per tag over `dir`, summed across sessions. */
+  /** Builds run so far per tag over `dir` (or over the path of a JVM
+    * entry), summed across sessions. */
   private[graft] def builds(dir: String): Map[String, Long] = {
     val counts = Seq.newBuilder[(String, Long)]
     buildCounts.forEach((k, n) => if (k.dir == dir) counts += k.tag -> n.get)

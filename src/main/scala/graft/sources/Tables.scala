@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.expr
+import org.apache.spark.sql.internal.SQLConf
 
 /** Source layer: loaders for the driver-provided parquet fixtures
   * (TESTDATA.md / FIXTURES.md §B).
@@ -14,6 +15,11 @@ import org.apache.spark.sql.functions.expr
   * view, so this layer also subsumes the reference's pass-through staging
   * models (`README.md:298-326`).
   *
+  * Every open is a declared-schema read, as the reference's DDL declares
+  * each column type and as [[SsbCsv]] declares its CSV schema: [[open]]
+  * infers a path's schema once per JVM (one footer job) and every later
+  * open, in any session, reads with `.schema(s)` and runs no job.
+  *
   * Scale posture: parquet scans are splittable and vectorized; filters and
   * projections composed downstream reach the scan via Catalyst pushdown, so
   * at 100 TB each query reads only the row groups/columns it needs.
@@ -21,7 +27,33 @@ import org.apache.spark.sql.functions.expr
 object Tables {
 
   private def read(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    open(spark, s"$dir/$name.parquet")
+
+  /** The parquet files at `path`, read with the schema Spark infers
+    * for them. The schema is built once per JVM for each file listing
+    * and each value of the session confs that change inference
+    * ([[SchemaConfs]]), so a rewrite or a conf change re-infers and an
+    * unchanged table opens in every later session without a job. */
+  private[graft] def open(spark: SparkSession, path: String): DataFrame = {
+    val tag = SchemaConfs.map(k => spark.conf.getOption(k).getOrElse(""))
+      .mkString("schema:", ",", "")
+    val schema = CacheRegistry.getOrBuildForJvm(spark, path, tag)(
+      spark.read.parquet(path).schema)
+    spark.read.schema(schema).parquet(path)
+  }
+
+  /** The session confs whose values change the schema inferred for the
+    * same files: the eight `ParquetToSparkSchemaConverter` reads, the
+    * two that choose which footers are read, and the one that types
+    * partition columns. */
+  private val SchemaConfs: Seq[String] = Seq(
+    SQLConf.PARQUET_BINARY_AS_STRING, SQLConf.PARQUET_INT96_AS_TIMESTAMP,
+    SQLConf.CASE_SENSITIVE, SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED,
+    SQLConf.LEGACY_PARQUET_NANOS_AS_LONG, SQLConf.PARQUET_FIELD_ID_READ_ENABLED,
+    SQLConf.PARQUET_IGNORE_VARIANT_ANNOTATION,
+    SQLConf.PARQUET_READER_RESPECT_UNKNOWN_TYPE_ANNOTATION,
+    SQLConf.PARQUET_SCHEMA_MERGING_ENABLED, SQLConf.PARQUET_SCHEMA_RESPECT_SUMMARIES,
+    SQLConf.PARTITION_COLUMN_TYPE_INFERENCE).map(_.key)
 
   def region(spark: SparkSession, dir: String): DataFrame     = read(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame     = read(spark, dir, "nation")
@@ -48,8 +80,8 @@ object Tables {
     * identically. */
   def eventsAt(spark: SparkSession, path: String)(
       load: DataFrame => DataFrame): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(path)
+    spark.conf.set(SQLConf.LEGACY_PARQUET_NANOS_AS_LONG.key, "true")
+    val raw = open(spark, path)
     val ts = raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         expr("timestamp_micros(ts div 1000)")
@@ -57,7 +89,8 @@ object Tables {
     }
     load(raw).withColumn("ts", ts)
   }
-  /** Every data file under `dir/name.parquet`, recursively (nested
+
+  /** Every data file under `path`, recursively (nested
     * `part=…/` directories included), through the Hadoop `FileSystem`
     * of the path's scheme — `file://`, `s3a://` and plain local paths
     * alike. Hidden entries (`_SUCCESS`, `.crc`, `_temporary/`) are
@@ -66,9 +99,8 @@ object Tables {
     * `LocatedFileStatus`'s permissions by forking a shell (measured on a
     * 4-core Linux box: 3.4 ms against 0.03 ms per file). A path that cannot be listed
     * throws. */
-  private def dataFiles(spark: SparkSession, dir: String,
-      name: String): Seq[FileStatus] = {
-    val root = new Path(s"$dir/$name.parquet")
+  private def dataFiles(spark: SparkSession, path: String): Seq[FileStatus] = {
+    val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     def walk(p: Path): Seq[FileStatus] = fs.listStatus(p).toSeq.flatMap { f =>
       val n = f.getPath.getName
@@ -85,7 +117,7 @@ object Tables {
   private def scanSplits(spark: SparkSession, dir: String, name: String): Int = {
     val maxSplit = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
       spark.conf.get("spark.sql.files.maxPartitionBytes", "128MB"))
-    dataFiles(spark, dir, name)
+    dataFiles(spark, s"$dir/$name.parquet")
       .map(f => math.max(1L, (f.getLen + maxSplit - 1) / maxSplit))
       .sum.min(Int.MaxValue.toLong).toInt
   }
@@ -148,8 +180,12 @@ object Tables {
     * rewrite of a table changes it. */
   private[graft] def fingerprint(spark: SparkSession, dir: String,
       tables: String*): String =
-    tables.map(t => dataFiles(spark, dir, t)
-        .map(f => s"${f.getPath}:${f.getLen}:${f.getModificationTime}")
-        .mkString(s"$t|", ",", ""))
+    tables.map(t => s"$t|" + pathFingerprint(spark, s"$dir/$t.parquet"))
       .mkString(";")
+
+  /** [[fingerprint]] of the data files under one `path`. */
+  private[graft] def pathFingerprint(spark: SparkSession, path: String): String =
+    dataFiles(spark, path)
+      .map(f => s"${f.getPath}:${f.getLen}:${f.getModificationTime}")
+      .mkString(",")
 }

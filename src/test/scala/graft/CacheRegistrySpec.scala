@@ -7,13 +7,22 @@ import java.util.concurrent.atomic.AtomicInteger
 import graft.operators.{Curation, Dedup, Similarity, TextAnalysis}
 import graft.plans.{Bucketed, Star}
 import graft.sources.{CacheRegistry, Tables}
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.hadoop.util.HadoopOutputFile
+import org.apache.parquet.schema.MessageTypeParser
+import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{BinaryType, StringType}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The [[CacheRegistry]] contract: every cache family retrains when a
   * table it was built from is rewritten (nested partition directories,
   * opened through a `file://` URI), concurrent callers share one build,
-  * and a failed build is retried. */
+  * and a failed build is retried. A table's schema is inferred once per
+  * JVM for each file listing and schema conf, whatever the session. */
 class CacheRegistrySpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark = TestSpark.spark
 
@@ -124,5 +133,57 @@ class CacheRegistrySpec extends AnyFunSuite with BeforeAndAfterAll {
   test("an unlistable dir throws instead of caching without invalidation") {
     intercept[java.io.FileNotFoundException](
       Tables.fingerprint(spark, "file:///nonexistent/graft", "documents"))
+  }
+
+  /** Schema builds so far for `table` of `dir`, over every conf. */
+  private def schemaBuilds(dir: String, table: String): Long =
+    CacheRegistry.builds(s"$dir/$table.parquet").values.sum
+
+  test("a table rewritten with an added column opens with its new schema") {
+    val dir = corpus(Seq("region"))
+    assert(!Tables.region(spark, dir).columns.contains("r_extra"))
+    Tables.region(spark, dir)
+    assert(schemaBuilds(dir, "region") == 1L, "a repeat open must hit")
+    spark.read.parquet(s"${TestSpark.Sf}/region.parquet")
+      .withColumn("r_extra", lit(7L)).coalesce(1)
+      .write.mode("overwrite").parquet(s"$dir/region.parquet/part=0")
+    val reopened = Tables.region(spark, dir)
+    assert(reopened.columns.contains("r_extra"))
+    assert(reopened.select(col("r_extra")).collect().map(_.getLong(0)).toSet == Set(7L))
+    assert(schemaBuilds(dir, "region") == 2L)
+  }
+
+  test("two sessions open one unchanged table with one schema build") {
+    val dir = corpus(Seq("nation"))
+    val (a, b) = (spark.newSession(), spark.newSession())
+    val rows = Tables.nation(a, dir).count()
+    assert(Tables.nation(b, dir).count() == rows)
+    assert(schemaBuilds(dir, "nation") == 1L)
+  }
+
+  test("binaryAsString changes the opened type of an unannotated binary column") {
+    // written without Spark's row metadata, which would pin the type
+    val dir = corpus(Nil)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val blob = MessageTypeParser.parseMessageType("message blob { required binary b; }")
+    val out = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(
+      new Path(s"$dir/blobs.parquet/part-0.parquet"), conf)).withType(blob).withConf(conf).build()
+    try Seq("x", "y").foreach(v => out.write(new SimpleGroupFactory(blob).newGroup().append("b", v)))
+    finally out.close()
+    val key = SQLConf.PARQUET_BINARY_AS_STRING.key
+    val prev = spark.conf.getOption(key)
+    def typeOfB(asString: Boolean) = {
+      spark.conf.set(key, asString.toString)
+      Tables(spark, dir, "blobs").schema("b").dataType
+    }
+    try {
+      assert(typeOfB(false) == BinaryType)
+      assert(typeOfB(true) == StringType)
+      assert(typeOfB(false) == BinaryType)
+      assert(schemaBuilds(dir, "blobs") == 2L, "one build per conf value")
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
   }
 }

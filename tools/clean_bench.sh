@@ -50,8 +50,8 @@ import json, re, sys
 out, sha, ctrl_file = sys.argv[1], sys.argv[2], sys.argv[3]
 nproc, cpus = int(sys.argv[4]), int(sys.argv[5])
 # the stdout JSON line abbreviates to the slowest keys; the full map is
-# the BENCH_FULL.json the Bench main just wrote into this cwd
-head = json.load(open('BENCH_FULL.json'))
+# the target/BENCH_FULL.json the Bench main just wrote under this cwd
+head = json.load(open('target/BENCH_FULL.json'))
 ctrl = {}
 for line in open(ctrl_file):
     m = re.search(r'(\S+) rep2: ([0-9.]+) s', line)
