@@ -47,25 +47,43 @@ object Curation extends QueryPack {
         .localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
     }
 
-  /** Edge-store ceiling for [[componentsOf]]'s driver union-find fast
-    * path: below it the verified near-dup pair set is a few hundred
+  /** Bytes one (long, long) edge row takes in a deserialized
+    * MEMORY_AND_DISK checkpoint, read off the BlockManager at sf0.001,
+    * sf0.01 and sf0.1 (83.1-84.8; 42.2 serialized): converts the
+    * storage ceilings the edge gates were tuned on into row counts. */
+  private val StoredEdgeRowBytes = 84L
+
+  /** Edge-row ceiling for [[componentsOf]]'s driver union-find fast
+    * path: below it the verified near-dup pair set is at most ~200
     * thousand rows of two longs — BOUNDED DRIVER BOOKKEEPING in the
     * same sense as the k-means centroid or PQ codebook collects — and
     * the whole iterative fixpoint collapses to one collect plus a
     * broadcast join. Above it the distributed pointer-jumping loop
-    * runs. Tests force 0 to pin the loop path. */
-  private[graft] val DriverComponentsMaxEdgeBytes = 16L * 1024 * 1024
+    * runs. Tests force 0 to pin the loop path. The ceiling was 16 MiB
+    * of checkpoint storage; it is converted at [[StoredEdgeRowBytes]]. */
+  private[graft] val DriverComponentsMaxEdgeRows = 16L * 1024 * 1024 / StoredEdgeRowBytes
+
+  /** [[GraftBridge.checkpoint]] of a label round that also counts the
+    * rows whose BOOLEAN `chg` column is true (nulls count as false) —
+    * the fixpoint test of [[componentsOf]] and [[communitiesOf]], read
+    * off the materializing job instead of a job of its own. */
+  private def checkpointCountingChanged(df: DataFrame): GraftBridge.Checkpoint = {
+    val i = df.columns.indexOf("chg")
+    require(i >= 0, s"no chg column in ${df.columns.mkString(",")}")
+    GraftBridge.checkpoint(df,
+      fold = r => if (!r.isNullAt(i) && r.getBoolean(i)) 1L else 0L)
+  }
 
   /** Connected components over arbitrary near-dup edges: (doc_id,
     * component) where component = min doc_id reachable. Nodes with no
     * edges map to themselves.
     *
-    * Two regimes, byte-gated by the free storage probe over the
-    * just-checkpointed edge list (the LPA lesson — small graphs are
+    * Two regimes, row-gated by the count the edge list's own
+    * checkpoint job returns (the LPA lesson — small graphs are
     * SCHEDULING-bound, and a multi-job fixpoint loop over a
     * few-hundred-edge graph is pure driver round-trip overhead):
     *
-    *  - edges ≤ [[DriverComponentsMaxEdgeBytes]]: collect the pair list
+    *  - edges ≤ [[DriverComponentsMaxEdgeRows]]: collect the pair list
     *    (two longs per edge) and run min-label union-find on the
     *    driver; the result rejoins as ONE broadcast map over the nodes
     *    frame — zero iterative materializations, and the mapping is
@@ -97,7 +115,7 @@ object Curation extends QueryPack {
     * rewrite; the LSH variant reads 2.2 s). */
   private[graft] def componentsOf(nodes: DataFrame, edges0: DataFrame,
       maxRounds: Int = 25,
-      driverMaxEdgeBytes: Long = DriverComponentsMaxEdgeBytes,
+      driverMaxEdgeRows: Long = DriverComponentsMaxEdgeRows,
       edgesSubsetOfNodes: Boolean = false): DataFrame = {
     // localCheckpoint (not cache) on the edge list and every round's
     // labels: an iterative plan otherwise GROWS — round k's logical
@@ -105,15 +123,16 @@ object Curation extends QueryPack {
     // the whole thing even when execution hits a cache. Checkpointing
     // truncates the lineage to the materialized RDD; superseded round
     // RDDs are released explicitly below.
-    val edges = edges0.select(col("doc_a"), col("doc_b")).localCheckpoint()
-    if (GraftBridge.checkpointStorageBytes(edges) <= driverMaxEdgeBytes) {
+    val edgesCk = GraftBridge.checkpoint(edges0.select(col("doc_a"), col("doc_b")))
+    val edges = edgesCk.frame
+    if (edgesCk.rows <= driverMaxEdgeRows) {
       import nodes.sparkSession.implicits._
       val es0 = edges.as[(Long, Long)].collect()
       GraftBridge.releaseLocalCheckpoint(edges)
       // Drop edges with PHANTOM endpoints (ids absent from `nodes`) —
       // the distributed loop below drops them implicitly at the label
       // join, and without this filter a phantom id could transitively
-      // glue two real components on this side of the byte gate only.
+      // glue two real components on this side of the row gate only.
       // The membership probe is bounded: one semi-join of `nodes`
       // against the (small, already-collected) touched-id set. Callers
       // whose edges are derived FROM the node set (the canonical-map
@@ -178,15 +197,15 @@ object Curation extends QueryPack {
             .as("component"))
       // pointer jumping: label := label(label) — halves chain lengths,
       // so convergence is O(log diameter) rounds, not O(diameter)
-      // eager checkpoint + fixpoint diff count in ONE job
-      // (localCheckpointCountIf) — the separate count was a second
-      // scheduling round trip per round
-      val (next, nChanged) = GraftBridge.localCheckpointCountIf(propagated
+      // eager checkpoint + fixpoint diff count in ONE job — the
+      // separate count was a second scheduling round trip per round
+      val ck = checkpointCountingChanged(propagated
         .join(propagated.select(col("doc_id").as("component"),
           col("component").as("cc")), Seq("component"))
         .select(col("doc_id"), col("old"), col("cc").as("component"))
-        .withColumn("chg", col("component") =!= col("old")), "chg")
-      changed = nChanged
+        .withColumn("chg", col("component") =!= col("old")))
+      val next = ck.frame
+      changed = ck.tally
       // next is materialized and the diff count is done: the superseded
       // round's labels can be dropped NOW, not at ContextCleaner/GC
       // whim — R rounds would otherwise pin R label copies
@@ -238,23 +257,26 @@ object Curation extends QueryPack {
     * BROADCAST hash relation at or below this row count (~30 MB of
     * longs at the cap — executor-safe) and falls back to a
     * SHUFFLE-HASH join above it: the state then crosses the wire
-    * partitioned, never resident whole in any executor, and the
-    * stat-less checkpointed big frame still avoids the per-round
-    * sort-merge the planner would otherwise pick. The fixture graphs
+    * partitioned, never resident whole in any executor, and the big
+    * checkpointed frame still avoids the per-round sort-merge the
+    * planner picked when checkpoints had no statistics. The fixture graphs
     * sit far below the gate; tests force it to 0 to pin the
     * giant-graph path. */
   private[graft] val StateBroadcastMaxRows = 2000000L
 
-  /** Cached-bytes ceiling for LPA's SMALL-graph latency levers
-    * (multi-hop batching, AQE-off rounds, narrowed stage widths):
+  /** Edge-row ceiling for the SMALL-graph latency levers of LPA,
+    * pagerank and k-core (multi-hop batching, AQE-off rounds, narrowed
+    * stage widths):
     * below it the rounds are scheduling-bound and the levers pay;
     * above it a round is real compute and the single-hop path with
     * adaptive execution wins — sub-gate NODE state alone does not
     * imply a small graph (the ×100 co-purchase graph has |V| = 2M at
     * the gate but 2|E| = 480M rows, where one batched job's chained
-    * broadcasts + dual full-graph votes exhaust the heap). Measured
-    * storage: sf0.1 und ≈ 100 MB, ×10 ≈ 1 GB, ×100 ≈ 10+ GB. */
-  private[graft] val SmallGraphEdgeBytes = 512L * 1024 * 1024
+    * broadcasts + dual full-graph votes exhaust the heap). The ceiling
+    * was 512 MiB of checkpoint storage (~6.4M rows at
+    * [[StoredEdgeRowBytes]]); LPA's directed edge copy holds 2.39M rows
+    * at sf0.1, 10× that at ×10. */
+  private[graft] val SmallGraphEdgeRows = 512L * 1024 * 1024 / StoredEdgeRowBytes
 
   /** Edge-table broadcast ceiling for the triangle census: the oriented
     * edge set broadcasts below this (the LongHashedRelation fast path —
@@ -328,23 +350,27 @@ object Curation extends QueryPack {
     val spark = edges0.sparkSession
     val nPart = spark.sessionState.conf.numShufflePartitions
     val edgesOwned = edges0.storageLevel == StorageLevel.NONE
-    val edges = if (edgesOwned) edges0.localCheckpoint() else edges0
-    val degree = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-    // checkpoint + gate count ride one job (localCheckpointCounted)
-    val (nodes0, nNodes) = GraftBridge.localCheckpointCounted(
-      edges.select(col("src").as("id")).distinct())
-    var nodes = nodes0
+    val edges = if (edgesOwned) GraftBridge.checkpoint(edges0).frame else edges0
+    // ONE job pins the out-degree table and counts both gate inputs,
+    // whatever the caller passed in (owned, checkpointed or
+    // CacheManager-persisted): its rows are the nodes (every node has
+    // an out-edge) and its `deg` column sums to |E|
+    val degreeCk = GraftBridge.checkpoint(
+      edges.groupBy(col("src")).agg(count(lit(1)).as("deg")),
+      fold = _.getLong(1))
+    val degree = degreeCk.frame
+    val nNodes = degreeCk.rows
     // ranks/contribs are one (id, long) row per NODE; every state join
     // rides a SHUFFLE-HASH hint against asserted layouts — only the
     // |V|-row state side exchanges per round, and the planner never
-    // falls into the per-round sort-merge a stat-less checkpoint would
-    // otherwise get (measured: 15 s SMJ vs 4 s hinted, warm at sf0.1).
+    // falls into the per-round sort-merge it picked when checkpoints had
+    // no statistics (measured: 15 s SMJ vs 4 s hinted, warm at sf0.1).
     val giant = nNodes > stateBroadcastMaxRows
     // ONE loop shape at every tier (r17 optimization round): both loop
     // inputs pre-partitioned on their join keys ONCE, with the layout
-    // RE-ASSERTED on the checkpointed LogicalRDD
-    // (GraftBridge.localCheckpointHashPartitioned) — a plain
-    // localCheckpoint comes back UnknownPartitioning, so every round's
+    // RE-ASSERTED on the checkpointed LogicalRDD (the hashed form of
+    // GraftBridge.checkpoint) — a plain checkpoint reports
+    // UnknownPartitioning, so every round's
     // state join would replan an ENSURE_REQUIREMENTS exchange of the
     // full O(|E|) edge frame (the dominant per-round cost at the giant
     // tier). With the layout visible, withDeg (clustered src) ⋈ ranks
@@ -354,7 +380,7 @@ object Curation extends QueryPack {
     // and AQE:
     //  - giant (or big-but-sub-gate edges): production width (nPart),
     //    AQE on (skew splits, runtime re-plans);
-    //  - small regime (sub-gate state AND sub-SmallGraphEdgeBytes
+    //  - small regime (sub-gate state AND sub-SmallGraphEdgeRows
     //    edges — the r12 ×100 lesson that state rows say nothing about
     //    edge volume): a state-sized width with AQE OFF for the rounds
     //    planned on a session clone
@@ -370,20 +396,13 @@ object Curation extends QueryPack {
     //    (The earlier 4.9 → 8.3 s rejection of the asserted form below
     //    the gate measured it at nPart width WITH AQE on — the width
     //    pin and the job-per-stage cut are what flip the trade.)
-    // OrUnknown, not the strict probe (ADVICE r17): on the
-    // edgesOwned=false branch the caller may hand a CacheManager-
-    // persisted but never-checkpointed frame — no LogicalRDD, so the
-    // size is unknown and the loop takes the big-graph path instead of
-    // require-crashing a seam r16 accepted.
-    val edgesBytes = GraftBridge.checkpointStorageBytesOrUnknown(edges)
-    val loopSmall = !giant && edgesBytes <= SmallGraphEdgeBytes
+    val loopSmall = !giant && degreeCk.tally <= SmallGraphEdgeRows
     val loopW = if (loopSmall) GraftBridge.stateWidth(spark, nNodes) else nPart
-    val withDeg = GraftBridge.localCheckpointHashPartitioned(
-      edges.join(degree, "src"), loopW, "src")
-    val spreadNodes =
-      GraftBridge.localCheckpointHashPartitioned(nodes, loopW, "id")
-    GraftBridge.releaseLocalCheckpoint(nodes)
-    nodes = spreadNodes
+    val withDeg = GraftBridge.checkpoint(
+      edges.join(degree, "src"), Some((loopW, Seq("src")))).frame
+    val nodes = GraftBridge.checkpoint(
+      degree.select(col("src").as("id")), Some((loopW, Seq("id")))).frame
+    GraftBridge.releaseLocalCheckpoint(degree)
     // withDeg and nodes are materialized: an owned edge checkpoint has
     // served its purpose — free it before the rounds run, not after
     if (edgesOwned) GraftBridge.releaseLocalCheckpoint(edges)
@@ -406,7 +425,7 @@ object Curation extends QueryPack {
           (lit(15L * Fp / 100) +
             expr(s"85 * coalesce(s, 0L) div 100")).as("rank"))
       // carry the id-clustering into the next round's state join
-      val next = GraftBridge.localCheckpointHashPartitioned(stepped, loopW, "id")
+      val next = GraftBridge.checkpoint(stepped, Some((loopW, Seq("id")))).frame
       if (ranksOwned) GraftBridge.releaseLocalCheckpoint(ranks)
       ranks = next
       ranksOwned = true
@@ -453,8 +472,8 @@ object Curation extends QueryPack {
     val withDeg = e
       .join(deg.select(col("id").as("u"), col("deg").as("du")), "u")
       .join(deg.select(col("id").as("v"), col("deg").as("dv")), "v")
-    // checkpoint + |E| gate count ride one job (localCheckpointCounted)
-    val (oriented, edgeCount) = GraftBridge.localCheckpointCounted(
+    // checkpoint + |E| gate count ride one job
+    val orientedCk = GraftBridge.checkpoint(
       withDeg.select(
         when(col("du") < col("dv") ||
              (col("du") === col("dv") && col("u") < col("v")), col("u"))
@@ -463,6 +482,8 @@ object Curation extends QueryPack {
              (col("du") === col("dv") && col("u") < col("v")), col("v"))
           .otherwise(col("u")).as("dst"),
         greatest(col("du"), col("dv")).as("ddeg")))
+    val oriented = orientedCk.frame
+    val edgeCount = orientedCk.rows
     // wedges at the low vertex: pairs of out-neighbors, ordered by
     // (deg, id) so the closing edge is oriented v -> w by construction.
     // EXPLICIT partition count on the self-join inputs: the edge table
@@ -543,9 +564,9 @@ object Curation extends QueryPack {
     * bookkeeping. Each peel round is one endpoint-explode degree
     * aggregate + two semi joins against the |V|-bounded survivor set,
     * broadcast below [[StateBroadcastMaxRows]] and shuffle-hash above
-    * it (the checkpointed edge frame has no stats — without a hint the
-    * planner sorts the full edge table twice per round, the pageRank
-    * lesson), all over the HALVED u<v edge list rather
+    * it (measured when checkpoints had no statistics: without a hint
+    * the planner sorted the full edge table twice per round, the
+    * pageRank lesson), all over the HALVED u<v edge list rather
     * than a doubled directed copy; rounds are a driver-side fixpoint
     * test on the edge count (the [[components]] precedent), measured 5
     * on the co-purchase graph and capped at [[KCoreMaxRounds]].
@@ -568,8 +589,8 @@ object Curation extends QueryPack {
     // hands in the serialized shared cache; each peel round then
     // checkpoints a SHRINKING copy and drops its predecessor — without
     // the unpersist, R rounds pin R copies of O(|E|) (the ×100 OOM).
-    val (core0, nEdges0) = GraftBridge.localCheckpointCounted(e0)
-    var core = core0
+    val core0 = GraftBridge.checkpoint(e0)
+    var core = core0.frame
     // Lower-median initial degree from the count-of-counts histogram.
     // The cumulative walk runs as a WINDOW over the histogram rows and
     // only the 1-row answer reaches the driver: #distinct degree
@@ -595,7 +616,7 @@ object Curation extends QueryPack {
     def gatedKeep(s: DataFrame): DataFrame =
       if (total <= stateBroadcastMaxRows) broadcast(s)
       else s.hint("shuffle_hash")
-    var nEdges = nEdges0
+    var nEdges = core0.rows
     var rounds = 0
     var converged = false
     // Round cost at the sub-gate tier is SCHEDULING, not compute (r17
@@ -607,7 +628,7 @@ object Curation extends QueryPack {
     //    the two builds canonicalize identically and ReuseExchange
     //    collapses them — the communitiesOf device;
     //  - the shrunken edge list's checkpoint and the fixpoint count
-    //    ride ONE job (GraftBridge.localCheckpointCounted);
+    //    ride ONE job (GraftBridge.checkpoint);
     //  - below the gate the rounds plan on a session clone with
     //    AQE off and a state-sized shuffle width
     //    (GraftBridge.roundSession): every join is hint-decided, so AQE
@@ -615,20 +636,19 @@ object Curation extends QueryPack {
     // Measured at sf0.1 (BenchOne warm, same box window): see
     // OPTIMIZATION_r17.md (kcore section).
     val sess = core.sparkSession
-    if (total <= stateBroadcastMaxRows &&
-        GraftBridge.checkpointStorageBytes(core) <= SmallGraphEdgeBytes)
+    if (total <= stateBroadcastMaxRows && core0.rows <= SmallGraphEdgeRows)
       core = GraftBridge.onSession(
         GraftBridge.roundSession(sess, GraftBridge.stateWidth(sess, total)), core)
     while (!converged && rounds < KCoreMaxRounds) {
       val keep = gatedKeep(
         degrees(core).filter(col("deg") >= k).select(col("id")))
-      val (next, n) = GraftBridge.localCheckpointCounted(core
+      val next = GraftBridge.checkpoint(core
         .join(keep.as("ku"), col("u") === col("ku.id"), "left_semi")
         .join(keep.as("kv"), col("v") === col("kv.id"), "left_semi"))
-      converged = n == nEdges
-      nEdges = n
+      converged = next.rows == nEdges
+      nEdges = next.rows
       GraftBridge.releaseLocalCheckpoint(core)
-      core = next
+      core = next.frame
       rounds += 1
     }
     degrees(GraftBridge.onSession(sess, core))
@@ -1056,17 +1076,18 @@ object Curation extends QueryPack {
   private[graft] def communitiesOf(e0: DataFrame,
       stateBroadcastMaxRows: Long = StateBroadcastMaxRows): DataFrame = {
     val nPart = e0.sparkSession.sessionState.conf.numShufflePartitions
-    var und = e0.select(col("u").as("src"), col("v").as("dst"))
-      .union(e0.select(col("v").as("src"), col("u").as("dst")))
-      .localCheckpoint()
-    // checkpoint + gate count ride one job (localCheckpointCounted)
-    val (labels0, nNodes) = GraftBridge.localCheckpointCounted(
+    val undCk = GraftBridge.checkpoint(e0.select(col("u").as("src"), col("v").as("dst"))
+      .union(e0.select(col("v").as("src"), col("u").as("dst"))))
+    var und = undCk.frame
+    // checkpoint + gate count ride one job
+    val labelsCk = GraftBridge.checkpoint(
       und.select(col("src").as("id")).distinct()
         .withColumn("lbl", col("id")))
-    var labels = labels0
+    val nNodes = labelsCk.rows
+    var labels = labelsCk.frame
     // giant-graph path only: re-spread the directed copy on dst before
     // the rounds, with the layout RE-ASSERTED on the checkpoint
-    // (GraftBridge.localCheckpointHashPartitioned) so the planner SEES
+    // (the hashed form of GraftBridge.checkpoint) so the planner SEES
     // it: the per-round label join (and the tail rounds' dst semi-join)
     // then plans exchange-free on the 2|E| edge side, moving only the
     // |V|-row label frame per round. Without the assertion the
@@ -1079,7 +1100,7 @@ object Curation extends QueryPack {
     // destroys anyway, so src pre-partitioning buys nothing — first
     // measured as the r8 "pre-partition by src" rejection, now
     // structural.)
-    // SMALL-graph regime: sub-gate node state AND a sub-[[SmallGraphEdgeBytes]]
+    // SMALL-graph regime: sub-gate node state AND a sub-[[SmallGraphEdgeRows]]
     // edge list — only then are the rounds scheduling-bound, not
     // compute-bound (job profile at sf0.1: 871 tasks averaging ~38 ms
     // executor time for <1 s of real compute), and only then do the
@@ -1090,15 +1111,14 @@ object Curation extends QueryPack {
     // hop's chained 2M-row broadcasts plus full-graph votes in one job
     // exhaust the heap. The big-but-sub-gate regime rides the proven
     // single-hop path (AQE on, broadcast state, full-round re-spread).
-    // the edge-volume read is a FREE driver-side storage probe over the
-    // just-materialized checkpoint — sizing by df.count() cost a full
-    // cached scan per invocation (~4 s/rep at ×10, the r12 sweep's one
-    // regression before this)
-    val undBytes = GraftBridge.checkpointStorageBytes(und)
-    val small = nNodes <= stateBroadcastMaxRows && undBytes <= SmallGraphEdgeBytes
+    // The edge volume is the row count und's own checkpoint job
+    // returned — sizing by df.count() cost a full cached scan per
+    // invocation (~4 s/rep at ×10, the r12 sweep's one regression
+    // before the count rode the checkpoint)
+    val small = nNodes <= stateBroadcastMaxRows && undCk.rows <= SmallGraphEdgeRows
     val votePart = if (small) GraftBridge.stateWidth(e0.sparkSession, nNodes) else nPart
     if (nNodes > stateBroadcastMaxRows) {
-      val spread = GraftBridge.localCheckpointHashPartitioned(und, nPart, "dst")
+      val spread = GraftBridge.checkpoint(und, Some((nPart, Seq("dst")))).frame
       GraftBridge.releaseLocalCheckpoint(und)
       und = spread
     } else if (small && und.rdd.getNumPartitions > 2 * votePart) {
@@ -1192,11 +1212,11 @@ object Curation extends QueryPack {
         val withA = vH.as("vb")
           .join(broadcast(lPrev.as("la")), col("vb.id") === col("la.id"))
           .select(col("vb.id"), col("vb.nlbl"), col("la.lbl").as("lbla"))
-        // diff count fused into the materializing job itself
-        // (localCheckpointCountIf) — the agg-collect was one more
-        // full scheduling round trip per batch
-        val (next, nB) = GraftBridge.localCheckpointCountIf(
-          withA.withColumn("chg", col("nlbl") =!= col("lbla")), "chg")
+        // diff count fused into the materializing job itself — the
+        // agg-collect was one more full scheduling round trip per batch
+        val ck = checkpointCountingChanged(
+          withA.withColumn("chg", col("nlbl") =!= col("lbla")))
+        val (next, nB) = (ck.frame, ck.tally)
         releaseSuperseded(owned)
         owned = Seq(next)
         labels = next.select(col("id"), col("nlbl").as("lbl"))
@@ -1266,13 +1286,14 @@ object Curation extends QueryPack {
         // round at sf0.1). ONE materialization per round carries
         // (id, nlbl, olbl); labels and the changed frontier are narrow
         // projections over that checkpoint
-        val (next, nChanged) = GraftBridge.localCheckpointCountIf(
+        val ck = checkpointCountingChanged(
           (if (r == 0) voted.withColumn("olbl", col("id"))
            else voted.as("v").hint("shuffle_hash")
              .join(gated(labels.as("ldiff"), nNodes),
                col("v.id") === col("ldiff.id"))
              .select(col("v.id"), col("nlbl"), col("ldiff.lbl").as("olbl")))
-          .withColumn("chg", col("nlbl") =!= col("olbl")), "chg")
+          .withColumn("chg", col("nlbl") =!= col("olbl")))
+        val (next, nChanged) = (ck.frame, ck.tally)
         val changedIds = next.filter(col("chg")).select(col("id"))
         releaseSuperseded(owned)
         owned = Seq(next)
@@ -1288,17 +1309,18 @@ object Curation extends QueryPack {
         // labels separately — one extra scheduling round trip per tail
         // round, ~0.3-0.5 s of pure fixed overhead at sf0.1 across the
         // 751→1→0 tail.) The voted side is the hash build — broadcast
-        // below the gate, shuffle-hash above it; the stat-less
-        // checkpointed labels otherwise plan as a per-round sort.
+        // below the gate, shuffle-hash above it; without statistics the
+        // checkpointed labels planned as a per-round sort.
         // voted's true size is unknown pre-count (≤ the affected set,
         // which can approach |V| on a big sub-gate graph), so only the
         // small regime broadcasts it; otherwise hash-build it shuffled
-        val (next, nChanged) = GraftBridge.localCheckpointCountIf(labels
+        val ck = checkpointCountingChanged(labels
           .join(if (small) broadcast(voted) else voted.hint("shuffle_hash"),
             Seq("id"), "left")
           .select(col("id"), col("lbl").as("olbl"),
             coalesce(col("nlbl"), col("lbl")).as("lbl"))
-          .withColumn("chg", col("lbl") =!= col("olbl")), "chg")
+          .withColumn("chg", col("lbl") =!= col("olbl")))
+        val (next, nChanged) = (ck.frame, ck.tally)
         val changedIds = next.filter(col("chg")).select(col("id"))
         releaseSuperseded(owned)
         owned = Seq(next)

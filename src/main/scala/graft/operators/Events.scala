@@ -1006,8 +1006,9 @@ object Events extends QueryPack {
     // fixture |users| the passes run 8-wide instead of paying
     // 3 × nPart near-empty tasks per stage)
     import org.apache.spark.sql.GraftBridge
-    val (base, nUsers) = GraftBridge.localCheckpointCounted(base0)
-    val w = GraftBridge.stateWidth(spark, nUsers)
+    val baseCk = GraftBridge.checkpoint(base0)
+    val base = baseCk.frame
+    val w = GraftBridge.stateWidth(spark, baseCk.rows)
     import graft.plans.ExactRank
     val (r1, n) = ExactRank.withRank(base, w,
       Seq(col("recency_days"), col("user_id")), "r_rnk")

@@ -30,17 +30,17 @@ object ExactRank {
     * for callers that need `n` alongside the ranks).
     *
     * The per-partition counts ride the checkpoint's own materializing
-    * job ([[org.apache.spark.sql.GraftBridge.localCheckpointPartitionCounts]],
-    * r18 optimization round) — the previous
+    * job ([[org.apache.spark.sql.GraftBridge.checkpoint]], r18
+    * optimization round) — the previous
     * `groupBy(spark_partition_id)` pass cost one more whole job + a
     * width-sized cache scan per rank pass, pure fixed overhead for
     * callers that rank a frame several ways (`ev_rfm`'s three
     * quartiles). */
   def withRank(df: DataFrame, nPart: Int, sortCols: Seq[Column],
       rankCol: String): (DataFrame, Long) = {
-    val (parted, pcounts) =
-      org.apache.spark.sql.GraftBridge.localCheckpointPartitionCounts(
-        df.repartitionByRange(nPart, sortCols: _*))
+    val ck = org.apache.spark.sql.GraftBridge.checkpoint(
+      df.repartitionByRange(nPart, sortCols: _*))
+    val (parted, pcounts) = (ck.frame, ck.partitionRows)
     val offsets = pcounts.scanLeft(0L)(_ + _).init
     val spark = df.sparkSession
     import spark.implicits._

@@ -1,9 +1,10 @@
 package graft.sources
 
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.functions.expr
 import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.StructType
 
 /** Source layer: loaders for the driver-provided parquet fixtures
   * (TESTDATA.md / FIXTURES.md §B).
@@ -34,12 +35,22 @@ object Tables {
     * and each value of the session confs that change inference
     * ([[SchemaConfs]]), so a rewrite or a conf change re-infers and an
     * unchanged table opens in every later session without a job. */
-  private[graft] def open(spark: SparkSession, path: String): DataFrame = {
-    val tag = SchemaConfs.map(k => spark.conf.getOption(k).getOrElse(""))
-      .mkString("schema:", ",", "")
-    val schema = CacheRegistry.getOrBuildForJvm(spark, path, tag)(
-      spark.read.parquet(path).schema)
-    spark.read.schema(schema).parquet(path)
+  private[graft] def open(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(schemaOf(spark, path)).parquet(path)
+
+  /** The schema Spark infers for the files at `path` under the caller's
+    * schema confs, with `forced` overriding some of them. A forced value
+    * is set on a clone of the session made for the inference only, and
+    * only when the cache misses, so the caller's conf is never written. */
+  private def schemaOf(spark: SparkSession, path: String,
+      forced: (String, String)*): StructType = {
+    val values = forced.toMap
+    val tag = SchemaConfs.map(k => values.get(k).orElse(spark.conf.getOption(k))
+      .getOrElse("")).mkString("schema:", ",", "")
+    CacheRegistry.getOrBuildForJvm(spark, path, tag) {
+      val inferring = if (forced.isEmpty) spark else GraftBridge.cloneWith(spark, forced: _*)
+      inferring.read.parquet(path).schema
+    }
   }
 
   /** The session confs whose values change the schema inferred for the
@@ -70,8 +81,10 @@ object Tables {
     * the same files as a stream with the batch scan's schema).
     *
     * `events.ts` has shipped as two physical types across fixture
-    * generations: TIMESTAMP(NANOS) — which Spark 4's vectorized reader
-    * refuses, so it is read as raw nanos (legacy conf) and rebuilt —
+    * generations: TIMESTAMP(NANOS) — whose inference Spark 4 refuses
+    * unless the legacy `nanosAsLong` conf is set, so the schema is
+    * inferred with it set on a session clone, and the column is read
+    * as a declared bigint of raw nanos and rebuilt —
     * and plain TIMESTAMP(MICROS, isAdjustedToUTC=false), which arrives
     * as TIMESTAMP_NTZ. Both are normalized to the µs-precision
     * session-TZ `TimestampType` every downstream window/`unix_micros`
@@ -80,8 +93,8 @@ object Tables {
     * identically. */
   def eventsAt(spark: SparkSession, path: String)(
       load: DataFrame => DataFrame): DataFrame = {
-    spark.conf.set(SQLConf.LEGACY_PARQUET_NANOS_AS_LONG.key, "true")
-    val raw = open(spark, path)
+    val raw = spark.read.schema(schemaOf(spark, path,
+      SQLConf.LEGACY_PARQUET_NANOS_AS_LONG.key -> "true")).parquet(path)
     val ts = raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         expr("timestamp_micros(ts div 1000)")

@@ -61,12 +61,19 @@ object GraftBridge {
     val caller = spark.asInstanceOf[classic.SparkSession]
     val key = (caller.sessionUUID, width, caller.conf.getAll,
       caller.listenerManager.listListeners().toSeq, caller.getTags())
-    roundSessions.synchronized(roundSessions.computeIfAbsent(key, _ => {
-      val clone = caller.cloneSession()
-      clone.conf.set("spark.sql.adaptive.enabled", "false")
-      clone.conf.set("spark.sql.shuffle.partitions", width)
-      clone
-    }))
+    roundSessions.synchronized(roundSessions.computeIfAbsent(key, _ =>
+      cloneWith(caller, "spark.sql.adaptive.enabled" -> "false",
+        "spark.sql.shuffle.partitions" -> width.toString)))
+  }
+
+  /** A clone of `spark` with `conf` set on the clone only: the caller's
+    * runtime conf, listeners, extensions and job tags are copied, its
+    * SparkContext and cache manager shared, and its conf never
+    * written. */
+  def cloneWith(spark: SparkSession, conf: (String, String)*): SparkSession = {
+    val clone = spark.asInstanceOf[classic.SparkSession].cloneSession()
+    conf.foreach { case (k, v) => clone.conf.set(k, v) }
+    clone
   }
 
   /** The most recently used round sessions, least recent evicted first. */
@@ -92,103 +99,86 @@ object GraftBridge {
   def drainListenerBus(spark: SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
 
-  /** `repartition(n, keys).localCheckpoint()` that KEEPS the hash
-    * layout visible to the planner.
-    *
-    * `Dataset.localCheckpoint` wraps the materialized RDD in a
-    * `LogicalRDD` whose `outputPartitioning` comes back
-    * `UnknownPartitioning` (measured on this Spark build), so every
-    * downstream join/aggregate on the very keys the frame is already
-    * clustered by replans an ENSURE_REQUIREMENTS exchange — for an
-    * iterative graph loop that is a full O(|E|) reshuffle of the edge
-    * frame EVERY round. This helper re-asserts what is physically true:
-    * it copies the `LogicalRDD` with
-    * `HashPartitioning(keys, n)`, after which equi-joins and
-    * aggregates keyed on `keys` plan exchange-free against it.
-    *
-    * Safety argument (why the assertion cannot lie): the frame is
-    * materialized by THIS method via `repartition(n, keys)` with an
-    * EXPLICIT partition count — a `REPARTITION_BY_NUM` shuffle that AQE
-    * never coalesces or re-sizes — so the checkpointed RDD's layout is
-    * exactly `hashpartitioning(keys, n)` by construction. Asserting a
-    * layout a frame does not have would silently mis-join; that is why
-    * this method owns the repartition instead of trusting the caller's.
-    *
-    * Storage: plain eager `localCheckpoint()` (deserialized) — the
-    * working-frame policy for iterative loops (see
-    * [[graft.operators.Curation]] storage notes). */
-  def localCheckpointHashPartitioned(df: DataFrame, n: Int,
-      keys: String*): DataFrame = {
-    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-    import org.apache.spark.sql.execution.LogicalRDD
-    val ck = df.repartition(n, keys.map(df.col): _*)
-      .localCheckpoint(true, fixpointLevel(df.sparkSession))
-    val lr = ck.queryExecution.analyzed match {
-      case l: LogicalRDD => l
-      case other => throw new IllegalStateException(
-        s"localCheckpoint did not produce a LogicalRDD: $other")
-    }
-    val attrs = keys.map { k =>
-      lr.output.find(_.name == k).getOrElse(throw new IllegalArgumentException(
-        s"column $k not in ${lr.output.map(_.name).mkString(",")}"))
-    }
-    val fixed = lr.copy(outputPartitioning = HashPartitioning(attrs, n))(
-      ck.sparkSession.asInstanceOf[classic.SparkSession], None, None)
-    ofRows(ck.sparkSession, fixed)
+  /** What [[checkpoint]] returns: the pinned frame, the exact row count
+    * of each of its partitions (in partition-id order), and the sum of
+    * the fold over its rows. */
+  final case class Checkpoint(frame: DataFrame, partitionRows: Array[Long],
+      tally: Long) {
+    def rows: Long = partitionRows.sum
   }
 
-  /** Eager `localCheckpoint()` that returns the ROW COUNT of the
-    * materialized frame from the SAME job that materializes it.
+  /** Eager local checkpoint of `df` in ONE job that also counts the
+    * rows of every partition and sums `fold` over them.
     *
-    * `Dataset.localCheckpoint(eager = true)` internally persists the
-    * RDD and runs a `count()` to materialize — but discards the count,
-    * so every iterative fixpoint loop that needs one (k-core's edge
-    * count, connected components' changed-row diff) pays a SECOND
-    * whole job against the just-cached frame. On a scheduling-bound
-    * round (the sf0.1 graph-family regime: 1-2 task jobs × a ~0.13 s
-    * per-job floor) that doubles the round's fixed cost; at cluster
-    * scale it is still one fewer driver round trip and cache scan per
-    * round. This helper does what the eager checkpoint does — execute,
-    * copy rows, persist — and simply keeps the count the materializing
-    * action already computes.
+    * The job executes `df`, persists the copied rows at
+    * [[fixpointLevel]], truncates lineage (`RDD.localCheckpoint`, as
+    * `Dataset.localCheckpoint` does) and iterates every partition — the
+    * iteration both fills the cache and counts. Callers that need a row
+    * count (a size gate, a fixpoint test, rank offsets) or a tally (the
+    * changed-row count of a label round) read it off this job instead
+    * of running a second one against the cached frame. The counts come
+    * back as the job RESULT (one value per successful final task
+    * attempt), not as an accumulator, so retried or speculative tasks
+    * cannot double-count.
     *
-    * Same storage (MEMORY_AND_DISK, deserialized) and same release
-    * contract ([[releaseLocalCheckpoint]]) as a plain
-    * `localCheckpoint()`. */
-  def localCheckpointCounted(df: DataFrame): (DataFrame, Long) = {
-    val (out, n) = localCheckpointPartitionCounts(df)
-    (out, n.sum)
-  }
-
-  /** [[localCheckpointCounted]] keeping the PER-PARTITION tallies (in
-    * partition-id order — `runJob` results index by partition): the
-    * rank-offset bookkeeping of [[graft.plans.ExactRank]] fused into
-    * the materializing job, replacing its separate
-    * `groupBy(spark_partition_id).count.collect` pass (one whole job +
-    * a width-sized stage per rank pass, r18 optimization round). */
-  def localCheckpointPartitionCounts(df: DataFrame): (DataFrame, Array[Long]) =
-    checkpointWith(df, (_, it) => { var c = 0L
-      while (it.hasNext) { it.next(); c += 1 }; c })
-
-  /** Eager `localCheckpoint()` that additionally counts the rows whose
-    * BOOLEAN column `boolCol` is true (nulls count as false), again in
-    * the single materializing job — the changed-row convergence probe
-    * of the iterative graph loops (LPA / connected components) fused
-    * into the checkpoint instead of running as its own job per round.
+    * Statistics: the frame's `LogicalRDD` carries the origin plan's
+    * size estimate and the exact row count, as `Dataset.localCheckpoint`
+    * keeps the origin estimate. A checkpoint without statistics reports
+    * `defaultSizeInBytes` (8 EiB), and no join against it is ever
+    * broadcast without a hint.
     *
-    * Exactness: the per-partition tallies come back as the job RESULT
-    * (one value per successful final task attempt), not as an
-    * accumulator, so retried/speculative tasks cannot double-count. */
-  def localCheckpointCountIf(df: DataFrame,
-      boolCol: String): (DataFrame, Long) = {
-    val idx = df.queryExecution.analyzed.output.indexWhere(_.name == boolCol)
-    require(idx >= 0, s"localCheckpointCountIf: no column $boolCol in " +
-      df.queryExecution.analyzed.output.map(_.name).mkString(","))
-    val (out, n) = checkpointWith(df, (_, it) => { var c = 0L
-      while (it.hasNext) { val r = it.next()
-        if (!r.isNullAt(idx) && r.getBoolean(idx)) c += 1 }
-      c })
-    (out, n.sum)
+    * Layout: with `hashed = Some((width, keys))` the frame is first
+    * `repartition(width, keys)`ed and the `LogicalRDD` reports
+    * `HashPartitioning(keys, width)`, so joins and aggregates keyed on
+    * `keys` plan with no exchange on this side (a plain checkpoint
+    * reports `UnknownPartitioning`, and an iterative loop would reshuffle
+    * its O(|E|) edge frame every round). The assertion cannot lie: the
+    * repartition has an explicit count (`REPARTITION_BY_NUM`, which AQE
+    * never coalesces), so the materialized RDD is laid out exactly so by
+    * construction — this method owns the repartition rather than
+    * trusting the caller's, and requires the width it asserts.
+    *
+    * Release with [[releaseLocalCheckpoint]]. */
+  def checkpoint(df: DataFrame, hashed: Option[(Int, Seq[String])] = None,
+      fold: catalyst.InternalRow => Long = _ => 0L): Checkpoint = {
+    import org.apache.spark.sql.catalyst.plans.logical.Statistics
+    import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, UnknownPartitioning}
+    val src = hashed.fold(df) { case (width, keys) =>
+      df.repartition(width, keys.map(df.col): _*) }
+    val spark = src.sparkSession
+    val qe = src.queryExecution
+    // map(_.copy()): unsafe-row buffers are reused per partition; a
+    // persisted RDD must own its rows (the same copy Dataset.checkpoint
+    // makes before persisting)
+    val rdd = qe.toRdd.map(_.copy())
+    val output = qe.analyzed.output
+    val layout = hashed match {
+      case None => UnknownPartitioning(0)
+      case Some((width, keys)) =>
+        require(rdd.getNumPartitions == width, s"checkpoint: asked for $width " +
+          s"hash partitions, materialized ${rdd.getNumPartitions}")
+        HashPartitioning(keys.map(k => output.find(_.name == k).getOrElse(
+          throw new IllegalArgumentException(
+            s"column $k not in ${output.map(_.name).mkString(",")}"))), width)
+    }
+    rdd.persist(fixpointLevel(spark))
+    // the runJob below is the first action, so it materializes AND
+    // truncates: without the truncation every fixpoint round's frame
+    // keeps a shuffle-dependency chain through all prior rounds
+    rdd.localCheckpoint()
+    val counted = spark.sparkContext.runJob(rdd,
+      (it: Iterator[catalyst.InternalRow]) => {
+        var n = 0L
+        var t = 0L
+        while (it.hasNext) { t += fold(it.next()); n += 1 }
+        (n, t)
+      })
+    val partitionRows = counted.map(_._1)
+    val stats = Statistics(sizeInBytes = qe.optimizedPlan.stats.sizeInBytes,
+      rowCount = Some(BigInt(partitionRows.sum)))
+    val lr = execution.LogicalRDD(output, rdd, layout)(
+      spark.asInstanceOf[classic.SparkSession], Some(stats), None)
+    Checkpoint(ofRows(spark, lr), partitionRows, counted.map(_._2).sum)
   }
 
   /** Cluster-grade checkpoint-durability seam for the iterative
@@ -213,91 +203,6 @@ object GraftBridge {
     else org.apache.spark.storage.StorageLevel(
       useDisk = true, useMemory = true, deserialized = true,
       replication = replicas)
-  }
-
-  /** Shared body: execute `df`, persist the copied-row RDD at the
-    * localCheckpoint default storage (replication per [[fixpointLevel]]),
-    * run ONE job whose per-partition
-    * function both materializes the cache (iterating a persisted RDD
-    * populates its blocks — exactly how `count()` materializes an
-    * eager checkpoint) and folds `f` over the rows, and wrap the
-    * pinned RDD in a [[execution.LogicalRDD]] like
-    * `Dataset.localCheckpoint` does. */
-  private def checkpointWith[T: scala.reflect.ClassTag](df: DataFrame,
-      f: (org.apache.spark.TaskContext,
-          Iterator[org.apache.spark.sql.catalyst.InternalRow]) => T)
-      : (DataFrame, Array[T]) = {
-    val spark = df.sparkSession
-    val qe = df.queryExecution
-    // map(_.copy()): unsafe-row buffers are reused per partition; a
-    // persisted RDD must own its rows (the same copy Dataset.checkpoint
-    // makes before persisting)
-    val rdd = qe.toRdd.map(_.copy())
-    rdd.persist(fixpointLevel(spark))
-    // truncate lineage exactly like Dataset.localCheckpoint (which
-    // calls persist + RDD.localCheckpoint + count): the runJob below is
-    // the first action, so it materializes AND truncates. Without this
-    // (ADVICE r17, medium) every fixpoint round's frame kept a strong
-    // shuffle-dependency chain through all prior rounds — DAGScheduler
-    // re-walked a linearly growing stage graph per round and superseded
-    // rounds' shuffle files outlived their release.
-    rdd.localCheckpoint()
-    val res = spark.sparkContext.runJob(rdd, f)
-    val lr = execution.LogicalRDD(qe.analyzed.output, rdd)(
-      spark.asInstanceOf[classic.SparkSession], None, None)
-    (ofRows(spark, lr), res)
-  }
-
-  /** Cached bytes (memory + disk) behind a `localCheckpoint`ed frame,
-    * read from driver-side BlockManager metadata — a FREE size probe:
-    * deciding a size-gated code path with `df.count()` costs a full
-    * scan of the cached frame per invocation (measured seconds per rep
-    * on the ×10 co-purchase edge list), while the storage info is
-    * already on the driver the moment the eager checkpoint returns. */
-  def checkpointStorageBytes(df: DataFrame): Long = {
-    val rdds = df.queryExecution.analyzed.collect {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }
-    // Fail LOUDLY on the unknown-size cases instead of returning 0:
-    // callers size-gate on this value and 0 reads as "small", which is
-    // the unsafe direction — a not-yet-checkpointed frame or evicted
-    // blocks would arm small-graph levers (chained broadcasts, AQE
-    // off) on a graph of unknown size.
-    require(rdds.nonEmpty,
-      "checkpointStorageBytes: frame has no LogicalRDD — call it on an " +
-        "eagerly localCheckpoint()ed frame, not an arbitrary plan")
-    val ids = rdds.map(_.id).toSet
-    val infos = df.sparkSession.sparkContext.getRDDStorageInfo
-      .filter(i => ids.contains(i.id))
-    // An EMPTY checkpoint (0 partitions, e.g. AQE-coalesced empty
-    // frame) legitimately stores no blocks — size 0 is the truth, not
-    // an unknown. A checkpoint reporting FEWER cached partitions than
-    // the RDDs hold (including zero) is the unknown case: blocks
-    // evicted under memory pressure between the eager checkpoint and
-    // this probe — a PARTIAL eviction would otherwise under-report and
-    // could mis-arm a size-gated caller's small path. Report
-    // Long.MaxValue so such callers take the BIG-graph path — same
-    // safety direction as failing (small-graph levers never arm on an
-    // unknown size) but the job survives, degrading to the all-shuffle
-    // plan instead of aborting. The exception above stays reserved for
-    // the no-LogicalRDD misuse case.
-    val totalParts = rdds.map(_.getNumPartitions.toLong).sum
-    val cachedParts = infos.map(_.numCachedPartitions.toLong).sum
-    if (cachedParts < totalParts) Long.MaxValue
-    else infos.map(i => i.memSize + i.diskSize).sum
-  }
-
-  /** [[checkpointStorageBytes]] for seams where the frame may legally
-    * be a caller-provided plan that was never eagerly checkpointed
-    * (ADVICE r17: a CacheManager-persisted edge frame handed to
-    * `pageRankOf` crashed the strict probe's require). No LogicalRDD
-    * means the size is simply unknown — report Long.MaxValue so
-    * size-gated callers take the big-graph path, the same safety
-    * direction as the strict probe's partial-eviction fallback. */
-  def checkpointStorageBytesOrUnknown(df: DataFrame): Long = {
-    val hasRdd = df.queryExecution.analyzed.exists(
-      _.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD])
-    if (hasRdd) checkpointStorageBytes(df) else Long.MaxValue
   }
 
   /** Actually free a `localCheckpoint`ed frame's pinned blocks.

@@ -12,9 +12,9 @@ import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.hadoop.util.HadoopOutputFile
 import org.apache.parquet.schema.MessageTypeParser
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.functions.{col, lit, unix_micros}
 import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.sql.types.{BinaryType, StringType}
+import org.apache.spark.sql.types.{BinaryType, StringType, TimestampType}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -22,7 +22,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * table it was built from is rewritten (nested partition directories,
   * opened through a `file://` URI), concurrent callers share one build,
   * and a failed build is retried. A table's schema is inferred once per
-  * JVM for each file listing and schema conf, whatever the session. */
+  * JVM for each file listing and schema conf, whatever the session, and
+  * opening a table never writes the session's conf. */
 class CacheRegistrySpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark = TestSpark.spark
 
@@ -185,5 +186,30 @@ class CacheRegistrySpec extends AnyFunSuite with BeforeAndAfterAll {
       case Some(v) => spark.conf.set(key, v)
       case None => spark.conf.unset(key)
     }
+  }
+
+  test("events with TIMESTAMP(NANOS) ts open as µs timestamps and leave the conf alone") {
+    val dir = corpus(Seq("lineitem"))
+    val conf = spark.sparkContext.hadoopConfiguration
+    val events = MessageTypeParser.parseMessageType(
+      "message events { required int64 user_id; required int64 ts (TIMESTAMP(NANOS,true)); }")
+    val out = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(
+      new Path(s"$dir/events.parquet/part-0.parquet"), conf)).withType(events).withConf(conf).build()
+    val nanos = Seq(1700000000123456789L, 1700000001000000999L, 1700000002999999000L)
+    try nanos.zipWithIndex.foreach { case (ts, u) =>
+      out.write(new SimpleGroupFactory(events).newGroup().append("user_id", u.toLong).append("ts", ts))
+    } finally out.close()
+    val s = spark.newSession()
+    val key = SQLConf.LEGACY_PARQUET_NANOS_AS_LONG.key
+    val before = s.conf.get(key)
+    Tables.lineitem(s, dir)
+    val ev = Tables.events(s, dir)
+    assert(ev.schema("ts").dataType == TimestampType)
+    assert(ev.select(unix_micros(col("ts"))).collect().map(_.getLong(0)).sorted.toSeq ==
+      nanos.map(_ / 1000))
+    assert(s.conf.get(key) == before, "opening events wrote the session's conf")
+    Tables.lineitem(s, dir)
+    assert(CacheRegistry.builds(s"$dir/lineitem.parquet").keySet.size == 1,
+      "lineitem's schema was inferred under a second conf tag")
   }
 }

@@ -28,10 +28,10 @@ class CurationSpec extends AnyFunSuite {
     val n = 200L
     val nodes = (0L until n).toDF("doc_id")
     val edges = (0L until n - 1).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    // driverMaxEdgeBytes = 0 forces the DISTRIBUTED loop (the tiny edge
+    // driverMaxEdgeRows = 0 forces the DISTRIBUTED loop (the tiny edge
     // list would otherwise take the driver union-find fast path);
     // diameter 199 >> maxRounds: pure one-hop propagation would throw
-    val comp = Curation.componentsOf(nodes, edges, driverMaxEdgeBytes = 0L)
+    val comp = Curation.componentsOf(nodes, edges, driverMaxEdgeRows = 0L)
       .as[(Long, Long)].collect()
     assert(comp.length == n)
     assert(comp.forall(_._2 == 0L), "chain collapses to min label 0")
@@ -40,14 +40,14 @@ class CurationSpec extends AnyFunSuite {
   test("componentsOf: driver union-find fast path equals the distributed loop") {
     // chains (transitivity), a triangle with a redundant edge, self and
     // duplicate edges, isolated nodes — the mapping must be identical
-    // on both sides of the byte gate.
+    // on both sides of the row gate.
     val nodes = (0L until 40L).toDF("doc_id")
     val edges = (Seq((3L, 1L), (1L, 2L), (10L, 11L), (11L, 12L), (12L, 10L),
       (10L, 12L), (20L, 20L), (30L, 31L), (30L, 31L), (5L, 7L), (7L, 6L)))
       .toDF("doc_a", "doc_b")
     val fast = Curation.componentsOf(nodes, edges)
       .as[(Long, Long)].collect().toSet
-    val loop = Curation.componentsOf(nodes, edges, driverMaxEdgeBytes = 0L)
+    val loop = Curation.componentsOf(nodes, edges, driverMaxEdgeRows = 0L)
       .as[(Long, Long)].collect().toSet
     assert(fast == loop,
       s"fastOnly=${(fast -- loop).take(5)} loopOnly=${(loop -- fast).take(5)}")
@@ -65,7 +65,7 @@ class CurationSpec extends AnyFunSuite {
       .toDF("doc_a", "doc_b")
     val fast = Curation.componentsOf(nodes, edges)
       .as[(Long, Long)].collect().toSet
-    val loop = Curation.componentsOf(nodes, edges, driverMaxEdgeBytes = 0L)
+    val loop = Curation.componentsOf(nodes, edges, driverMaxEdgeRows = 0L)
       .as[(Long, Long)].collect().toSet
     assert(fast == loop,
       s"fastOnly=${(fast -- loop).take(5)} loopOnly=${(loop -- fast).take(5)}")
@@ -138,6 +138,20 @@ class CurationSpec extends AnyFunSuite {
     val again = Curation.pageRank(spark, TestSpark.Sf)
       .as[(Long, Double)].collect()
     assert(pr.toSeq == again.toSeq, "pagerank must be bit-deterministic")
+  }
+
+  test("pagerank: a caller-persisted edge frame ranks like an unpinned one") {
+    // a CacheManager-persisted frame is no checkpoint: pageRankOf reuses
+    // it instead of pinning a second copy, and still reads both gate
+    // counts off its degree checkpoint
+    val edges = (0L until 200L).map(i => (i % 37, (i * 7 + 3) % 37))
+      .filter { case (a, b) => a != b }.toDF("src", "dst")
+    val want = Curation.pageRankOf(edges).as[(Long, Double)].collect().toSet
+    val pinned = edges.persist()
+    try {
+      assert(pinned.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
+      assert(Curation.pageRankOf(pinned).as[(Long, Double)].collect().toSet == want)
+    } finally pinned.unpersist()
   }
 
   test("funnel: monotone stages that reconcile with the standalone queries") {

@@ -30,7 +30,8 @@ class ReentrancySpec extends AnyFunSuite {
   }
 
   test("four threads running graph loops and unrelated keys match a sequential run") {
-    val watched = Seq("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    val watched = Seq("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions",
+      "spark.sql.legacy.parquet.nanosAsLong")
     val initial = watched.map(k => k -> spark.conf.get(k)).toSet
     val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[(String, String)]()
     val running = new AtomicBoolean(true)
