@@ -349,7 +349,7 @@ object Curation extends QueryPack {
     // OOM, and dropping it alone took pagerank 640→520 s there).
     val spark = edges0.sparkSession
     val nPart = spark.sessionState.conf.numShufflePartitions
-    val edgesOwned = edges0.storageLevel == StorageLevel.NONE
+    val edgesOwned = !GraftBridge.isPinned(edges0)
     val edges = if (edgesOwned) GraftBridge.checkpoint(edges0).frame else edges0
     // ONE job pins the out-degree table and counts both gate inputs,
     // whatever the caller passed in (owned, checkpointed or
@@ -463,9 +463,7 @@ object Curation extends QueryPack {
   private[graft] def trianglesOf(e0: DataFrame): DataFrame = {
     // reuse the shared edge checkpoint when the caller pinned one
     // (coPurchaseEdges) — storage policy note in pageRankOf
-    val e =
-      if (e0.storageLevel == StorageLevel.NONE) e0.localCheckpoint()
-      else e0
+    val e = if (GraftBridge.isPinned(e0)) e0 else e0.localCheckpoint()
     val deg = e.select(explode(array(col("u"), col("v"))).as("id"))
       .groupBy(col("id")).agg(count(lit(1)).as("deg"))
     // orient by (deg, id): src = smaller endpoint in that order

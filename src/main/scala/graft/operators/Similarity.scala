@@ -407,7 +407,7 @@ object Similarity extends QueryPack {
   private[graft] def servingIndex(spark: SparkSession, dir: String)
       : (Seq[(Int, Array[Float])], Seq[Seq[(Int, Array[Double])]]) = {
     val c = pqCorpus(spark, dir)
-    val n = c.count()
+    val n = pqCorpusRows(spark, dir)
     (lloydCentroidsFor(spark, dir, c, LloydIters, ivfStride(n), "pq"),
       pqCodebooksFor(spark, dir, c))
   }
@@ -632,6 +632,11 @@ object Similarity extends QueryPack {
     corpus(spark, dir).filter(col("nrm") > 0)
       .withColumn("ne", expr("transform(embedding, x -> cast(x as double) / nrm)"))
 
+  /** Row count of [[pqCorpus]], cached per corpus like the statistics
+    * trained on it, so a query runs no count job of its own. */
+  private def pqCorpusRows(spark: SparkSession, dir: String): Long =
+    statCached(spark, dir, "pq_rows") { pqCorpus(spark, dir).count() }
+
   /** Per-subspace k-means codebooks, trained exactly like
     * [[lloydCentroids]] (deterministic every-20th-vector seeds, long
     * fixed-point sums, empty clusters keep their previous centroid) but
@@ -716,7 +721,7 @@ object Similarity extends QueryPack {
     * run-to-run determinism; ScaledAnnSpec re-pins at ×10. */
   def topKPq(spark: SparkSession, dir: String): DataFrame = {
     val c = pqCorpus(spark, dir)
-    val n = c.count()
+    val n = pqCorpusRows(spark, dir)
     val shortlist = pqShortlistRegime(n, isClusteredAt(spark, dir))
     val books = pqCodebooksFor(spark, dir, c)
     val lit3 = pqBooksLit(books)
@@ -787,7 +792,7 @@ object Similarity extends QueryPack {
       nProbes0: Int, shortlist0: Int): DataFrame = {
     import spark.implicits._
     val c = pqCorpus(spark, dir)
-    val n = c.count()
+    val n = pqCorpusRows(spark, dir)
     val cents = lloydCentroidsFor(spark, dir, c, LloydIters, ivfStride(n), "pq")
     val clustered = (nProbes0 <= 0 || shortlist0 <= 0) &&
       isClusteredAt(spark, dir)
@@ -902,7 +907,7 @@ object Similarity extends QueryPack {
       nProbes0: Int, shortlist0: Int): DataFrame = {
     import spark.implicits._
     val c = pqCorpus(spark, dir)
-    val n = c.count()
+    val n = pqCorpusRows(spark, dir)
     val cents = lloydCentroidsFor(spark, dir, c, LloydIters, ivfStride(n), "pq")
     val clustered = (nProbes0 <= 0 || shortlist0 <= 0) &&
       isClusteredAt(spark, dir)
@@ -1103,7 +1108,7 @@ object Similarity extends QueryPack {
       nProbes0: Int, shortlist0: Int): DataFrame = {
     import spark.implicits._
     val c = pqCorpus(spark, dir)
-    val n = c.count()
+    val n = pqCorpusRows(spark, dir)
     val cents = lloydCentroidsFor(spark, dir, c, LloydIters, ivfStride(n), "pq")
     val clustered = (nProbes0 <= 0 || shortlist0 <= 0) &&
       isClusteredAt(spark, dir)

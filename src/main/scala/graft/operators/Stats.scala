@@ -44,15 +44,40 @@ object Stats extends QueryPack {
     * yield NULL t/df in both engines. One partial-agg-friendly pass,
     * 7 output rows — scale-free. */
   def welchTTest(spark: SparkSession, dir: String): DataFrame =
-    welchTTestOf(Tables.events(spark, dir))
+    welchTTestOf(Tables.events(spark, dir)).orderBy(col("wd"))
+
+  /** Epoch weekday of `ts` (see [[welchTTest]]). */
+  private def epochWeekday = expr("unix_micros(ts) div 86400000000 % 7")
+
+  /** `value` in integer cents: `round(value·100)` as BIGINT. */
+  private def valueCents = round(col("value") * lit(100)).cast("long")
+
+  /** The two-arm encoding of an event that every purchase-vs-view key
+    * and its stream twin reads: `wd` (epoch weekday), `c` (cents) and
+    * `is_p` (purchase arm; the other arm is view). Other event types
+    * drop. */
+  private[graft] def twoArm(ev: DataFrame): DataFrame =
+    ev.filter(col("event_type").isin("view", "purchase"))
+      .select(epochWeekday.as("wd"), valueCents.as("c"),
+        (col("event_type") === "purchase").as("is_p"))
+
+  /** Per-(wd, c) two-arm counts over [[twoArm]]: `p` purchases and `v`
+    * views of each cents value — the counts-by-value grain of the KS,
+    * divergence and rank-sum keys. */
+  private def twoArmCounts(ev: DataFrame, p: String, v: String): DataFrame =
+    twoArm(ev).groupBy(col("wd"), col("c"))
+      .agg(sum(when(col("is_p"), 1L).otherwise(0L)).as(p),
+        sum(when(!col("is_p"), 1L).otherwise(0L)).as(v))
+
+  /** Event type and epoch weekday: the contingency grid's axes, shared
+    * by the χ² and Theil's U keys and their stream twins. */
+  private[graft] def typeWeekday(ev: DataFrame): DataFrame =
+    ev.select(col("event_type"), epochWeekday.as("wd"))
 
   /** Shared per-weekday two-arm BIGINT moment core (n / Σc / Σc² per
     * arm) of [[welchTTestOf]] and [[studentTTestOf]]. */
-  private def tTestMoments(ev: DataFrame): DataFrame = {
-    val cents = round(col("value") * lit(100)).cast("long")
-    ev.filter(col("event_type").isin("view", "purchase"))
-      .select(expr("unix_micros(ts) div 86400000000 % 7").as("wd"),
-        cents.as("c"), (col("event_type") === "purchase").as("is_p"))
+  private def tTestMoments(ev: DataFrame): DataFrame =
+    twoArm(ev)
       .groupBy(col("wd"))
       .agg(sum(when(col("is_p"), 1L).otherwise(0L)).as("n1"),
         sum(when(col("is_p"), col("c")).otherwise(0L)).as("s11"),
@@ -60,8 +85,8 @@ object Stats extends QueryPack {
         sum(when(!col("is_p"), 1L).otherwise(0L)).as("n2"),
         sum(when(!col("is_p"), col("c")).otherwise(0L)).as("s12"),
         sum(when(!col("is_p"), col("c") * col("c")).otherwise(0L)).as("s22"))
-  }
 
+  /** Unordered: its stream twin runs in update mode, which admits no sort. */
   private[graft] def welchTTestOf(ev: DataFrame): DataFrame = {
     val d = (c: org.apache.spark.sql.Column) => c.cast(DoubleType)
     val a = tTestMoments(ev)
@@ -84,7 +109,6 @@ object Stats extends QueryPack {
           col("se") * col("se") /
             (col("se1") * col("se1") / (d(col("n1")) - lit(1.0)) +
               col("se2") * col("se2") / (d(col("n2")) - lit(1.0)))).as("df"))
-      .orderBy(col("wd"))
   }
 
   /** ClickHouse `studentTTest` analogue: the POOLED-variance two-sample
@@ -99,8 +123,9 @@ object Stats extends QueryPack {
     * n ≤ 2, or zero pooled variance) yield NULL t in both engines.
     * One partial-agg pass, 7 rows — scale-free. */
   def studentTTest(spark: SparkSession, dir: String): DataFrame =
-    studentTTestOf(Tables.events(spark, dir))
+    studentTTestOf(Tables.events(spark, dir)).orderBy(col("wd"))
 
+  /** Unordered: its stream twin runs in update mode, which admits no sort. */
   private[graft] def studentTTestOf(ev: DataFrame): DataFrame = {
     val d = (c: org.apache.spark.sql.Column) => c.cast(DoubleType)
     tTestMoments(ev)
@@ -118,7 +143,6 @@ object Stats extends QueryPack {
           (d(col("s11")) / d(col("n1")) - d(col("s12")) / d(col("n2"))) /
             col("se")).as("t_stat"),
         (col("n1") + col("n2") - 2).as("df"))
-      .orderBy(col("wd"))
   }
 
   /** Two-sample Kolmogorov–Smirnov test (ClickHouse
@@ -137,14 +161,7 @@ object Stats extends QueryPack {
 
   private[graft] def ksTestOf(ev: DataFrame): DataFrame = {
     val d = (c: org.apache.spark.sql.Column) => c.cast(DoubleType)
-    val cents = round(col("value") * lit(100)).cast("long")
-    val byVal = ev
-      .filter(col("event_type").isin("view", "purchase"))
-      .select(expr("unix_micros(ts) div 86400000000 % 7").as("wd"),
-        cents.as("c"), (col("event_type") === "purchase").as("is_p"))
-      .groupBy(col("wd"), col("c"))
-      .agg(sum(when(col("is_p"), 1L).otherwise(0L)).as("c1"),
-        sum(when(!col("is_p"), 1L).otherwise(0L)).as("c2"))
+    val byVal = twoArmCounts(ev, "c1", "c2")
     val cumW = Window.partitionBy(col("wd")).orderBy(col("c"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val totW = Window.partitionBy(col("wd"))
@@ -192,14 +209,7 @@ object Stats extends QueryPack {
   private[graft] def jsDivergenceOf(ev: DataFrame): DataFrame = {
     import graft.functions.FixedLog2
     val d = (c: org.apache.spark.sql.Column) => c.cast(DoubleType)
-    val cents = round(col("value") * lit(100)).cast("long")
-    val cells = ev
-      .filter(col("event_type").isin("view", "purchase"))
-      .select(expr("unix_micros(ts) div 86400000000 % 7").as("wd"),
-        cents.as("c"), (col("event_type") === "purchase").as("is_p"))
-      .groupBy(col("wd"), col("c"))
-      .agg(sum(when(col("is_p"), 1L).otherwise(0L)).as("a"),
-        sum(when(!col("is_p"), 1L).otherwise(0L)).as("b"))
+    val cells = twoArmCounts(ev, "a", "b")
     val tots0 = cells.groupBy(col("wd"))
       .agg(sum(col("a")).as("n1"), sum(col("b")).as("n2"))
       .withColumn("tw", col("n1") * col("n2") * lit(2L))
@@ -246,14 +256,7 @@ object Stats extends QueryPack {
   private[graft] def klDivergenceOf(ev: DataFrame): DataFrame = {
     import graft.functions.FixedLog2
     val d = (c: org.apache.spark.sql.Column) => c.cast(DoubleType)
-    val cents = round(col("value") * lit(100)).cast("long")
-    val cells = ev
-      .filter(col("event_type").isin("view", "purchase"))
-      .select(expr("unix_micros(ts) div 86400000000 % 7").as("wd"),
-        cents.as("c"), (col("event_type") === "purchase").as("is_p"))
-      .groupBy(col("wd"), col("c"))
-      .agg(sum(when(col("is_p"), 1L).otherwise(0L)).as("a"),
-        sum(when(!col("is_p"), 1L).otherwise(0L)).as("b"))
+    val cells = twoArmCounts(ev, "a", "b")
     val tots0 = cells.groupBy(col("wd"))
       .agg(sum(col("a")).as("n1"), sum(col("b")).as("n2"),
         count(lit(1)).as("v"))
@@ -312,14 +315,7 @@ object Stats extends QueryPack {
     * weekday, the doubled rank sum 2R₁, 2U₁, group sizes and the tie
     * cubic sum — all exact BIGINT. */
   private def rankSumCore(ev: DataFrame): DataFrame = {
-    val cents = round(col("value") * lit(100)).cast("long")
-    val byVal = ev
-      .filter(col("event_type").isin("view", "purchase"))
-      .select(expr("unix_micros(ts) div 86400000000 % 7").as("wd"),
-        cents.as("c"), (col("event_type") === "purchase").as("is_p"))
-      .groupBy(col("wd"), col("c"))
-      .agg(sum(when(col("is_p"), 1L).otherwise(0L)).as("c1"),
-        sum(when(!col("is_p"), 1L).otherwise(0L)).as("c2"))
+    val byVal = twoArmCounts(ev, "c1", "c2")
       .withColumn("ct", col("c1") + col("c2"))
     val rankW = Window.partitionBy(col("wd")).orderBy(col("c"))
       .rowsBetween(Window.unboundedPreceding, -1)
@@ -394,9 +390,7 @@ object Stats extends QueryPack {
     * (n, nr, nc, chi2_micro) frame with the millionth-quantized χ² sum
     * — see [[cramersV]] for the determinism argument. */
   private def chiSqStats(ev: DataFrame): DataFrame = {
-    val base = ev.select(col("event_type"),
-      expr("unix_micros(ts) div 86400000000 % 7").as("wd"))
-    val cells = base.groupBy(col("event_type"), col("wd"))
+    val cells = typeWeekday(ev).groupBy(col("event_type"), col("wd"))
       .agg(count(lit(1)).as("o"))
     val rows = cells.groupBy(col("event_type")).agg(sum(col("o")).as("r"))
     val colsT = cells.groupBy(col("wd")).agg(sum(col("o")).as("cc"))
@@ -493,9 +487,7 @@ object Stats extends QueryPack {
     import graft.functions.FixedLog2
     val dec0 = (c: org.apache.spark.sql.Column) => c.cast(DecimalType(38, 0))
     val d = (c: org.apache.spark.sql.Column) => c.cast(DoubleType)
-    val base = ev.select(col("event_type"),
-      expr("unix_micros(ts) div 86400000000 % 7").as("wd"))
-    val cells = base.groupBy(col("event_type"), col("wd"))
+    val cells = typeWeekday(ev).groupBy(col("event_type"), col("wd"))
       .agg(count(lit(1)).as("o"))
     val rowsL = FixedLog2.withLog2(
       cells.groupBy(col("event_type")).agg(sum(col("o")).as("r")), "r", "l2r")
@@ -588,8 +580,7 @@ object Stats extends QueryPack {
     rankCorrOf(Tables.events(spark, dir))
 
   private[graft] def rankCorrOf(ev: DataFrame): DataFrame =
-    rankCorrCore(ev.select(col("event_type"),
-      round(col("value") * lit(100)).cast("long").as("x"),
+    rankCorrCore(ev.select(col("event_type"), valueCents.as("x"),
       expr("unix_micros(ts) % 86400000000").as("y")))
 
   /** Spearman's ρ per event type between log-bucketed value and
@@ -615,14 +606,19 @@ object Stats extends QueryPack {
     * hash-exact. */
   def rankCorrBucketed(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.FixedLog2
-    val rows = Tables.events(spark, dir).select(col("event_type"),
-      greatest(round(col("value") * lit(100)).cast("long"), lit(1L)).as("c"),
-      expr("(unix_micros(ts) % 86400000000) div 3600000000").as("y"))
+    val rows = bucketAxes(Tables.events(spark, dir))
     val buckets = FixedLog2.withLog2(rows.select(col("c")).distinct(), "c", "l2c")
       .select(col("c"), expr(s"l2c div ${FixedLog2.Unit / 8}").as("x"))
     rankCorrCore(rows.join(buckets, Seq("c"))
       .select(col("event_type"), col("x"), col("y")))
   }
+
+  /** [[rankCorrBucketed]]'s per-event axes before the log bucket:
+    * `c` (cents clamped to ≥ 1, the log's domain) and `y` (hour of day),
+    * shared with its stream twin. */
+  private[graft] def bucketAxes(ev: DataFrame): DataFrame =
+    ev.select(col("event_type"), greatest(valueCents, lit(1L)).as("c"),
+      expr("(unix_micros(ts) % 86400000000) div 3600000000").as("y"))
 
   private def rankCorrCore(base: DataFrame): DataFrame = {
     val d0 = (c: org.apache.spark.sql.Column) => c.cast(DecimalType(38, 0))

@@ -1,9 +1,12 @@
 package graft.streaming
 
 
+import graft.operators.Stats
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.types.DecimalType
+import scala.reflect.runtime.universe.TypeTag
 
 /** Structured Streaming re-expression of the [[graft.operators.Events]]
   * batch operators: the same event-time windows and sessionization,
@@ -500,17 +503,24 @@ object EventStream {
       }
   }
 
-  /** Exact µ-unit conversion matching the batch pipeline's
-    * `cast(DecimalType(38,6))` + `×1e6` chain bit-for-bit: Spark's
-    * double→decimal cast goes through the double's SHORTEST decimal
-    * representation (`BigDecimal.valueOf`) with HALF_UP scaling, so the
-    * streaming fold must too — `math.round(v * 1e6)` would disagree on
-    * ties because the multiply itself rounds. */
-  private def micros(v: Double): Long =
-    java.math.BigDecimal.valueOf(v).setScale(6, java.math.RoundingMode.HALF_UP)
-      .unscaledValue().longValueExact()
+  /** An event as the daily folds read it: `us` and `event_id` order the
+    * fold; `day` (`unix_micros div day`) and `u` (the batch
+    * `DECIMAL(38,6)` value scaled to exact BIGINT µ-units) are the
+    * expressions `Events.deltaSumDaily` and `Events.emaDaily` reduce,
+    * projected before `groupByKey` so the fold never re-implements them. */
+  case class DailyEv(event_type: String, us: Long, event_id: Long, day: Long,
+      u: Long)
 
-  private val DayUs: Long = 86400000000L
+  private def dailyEvents(spark: SparkSession,
+      eventsDir: String): Dataset[DailyEv] = {
+    import spark.implicits._
+    readEvents(spark, eventsDir)
+      .select(col("event_type"), unix_micros(col("ts")).as("us"),
+        col("event_id"), expr("unix_micros(ts) div 86400000000").as("day"),
+        (col("value").cast(DecimalType(38, 6)) * lit(1000000)).cast("long")
+          .as("u"))
+      .as[DailyEv]
+  }
 
   case class DeltaState(openDay: Long, openRevU: Long, firstDay: Long,
       hasClosed: Boolean, lastClosedRevU: Long, firstRevU: Long,
@@ -534,12 +544,9 @@ object EventStream {
     * the OPEN day at arrival; bound it with a watermark-sized replay. */
   def deltaSums(spark: SparkSession, eventsDir: String): Dataset[DeltaOut] = {
     import spark.implicits._
-    val evs = readEvents(spark, eventsDir)
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
-      .as[Ev]
-    evs.groupByKey(_.event_type)
+    dailyEvents(spark, eventsDir).groupByKey(_.event_type)
       .mapGroupsWithState[DeltaState, DeltaOut](GroupStateTimeout.NoTimeout()) {
-        (tpe: String, it: Iterator[Ev], state: GroupState[DeltaState]) =>
+        (tpe: String, it: Iterator[DailyEv], state: GroupState[DeltaState]) =>
           var s = state.getOption.getOrElse(
             DeltaState(Long.MinValue, 0L, 0L, hasClosed = false, 0L, 0L, 0L, 0L))
           def close(): Unit = {
@@ -549,15 +556,13 @@ object EventStream {
             } else s = s.copy(firstRevU = s.openRevU, hasClosed = true)
             s = s.copy(lastClosedRevU = s.openRevU, nClosed = s.nClosed + 1)
           }
-          it.toSeq.sortBy(e => (epochUs(e.ts), e.event_id)).foreach { e =>
-            val day = Math.floorDiv(epochUs(e.ts), DayUs)
-            val u = micros(e.value)
+          it.toSeq.sortBy(e => (e.us, e.event_id)).foreach { e =>
             if (s.openDay == Long.MinValue)
-              s = s.copy(openDay = day, openRevU = u, firstDay = day)
-            else if (day > s.openDay) {
+              s = s.copy(openDay = e.day, openRevU = e.u, firstDay = e.day)
+            else if (e.day > s.openDay) {
               close()
-              s = s.copy(openDay = day, openRevU = u)
-            } else s = s.copy(openRevU = s.openRevU + u) // same or late day
+              s = s.copy(openDay = e.day, openRevU = e.u)
+            } else s = s.copy(openRevU = s.openRevU + e.u) // same or late day
           }
           state.update(s)
           val closingDelta =
@@ -591,13 +596,10 @@ object EventStream {
     * trade as [[funnelLevels]]. */
   def emaStream(spark: SparkSession, eventsDir: String): Dataset[EmaOut] = {
     import spark.implicits._
-    val evs = readEvents(spark, eventsDir)
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
-      .as[Ev]
-    evs.groupByKey(_.event_type)
+    dailyEvents(spark, eventsDir).groupByKey(_.event_type)
       .flatMapGroupsWithState[EmaState, EmaOut](
         OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
-        (tpe: String, it: Iterator[Ev], state: GroupState[EmaState]) =>
+        (tpe: String, it: Iterator[DailyEv], state: GroupState[EmaState]) =>
           var s = state.getOption.getOrElse(EmaState(Long.MinValue, 0L, Nil))
           val out = Seq.newBuilder[EmaOut]
           def close(): Unit = {
@@ -612,14 +614,12 @@ object EventStream {
             out += EmaOut(tpe, d, numer.toDouble / denom.toDouble, terms.size.toLong)
             s = s.copy(window = EmaDay(d, s.openRevU) :: s.window)
           }
-          it.toSeq.sortBy(e => (epochUs(e.ts), e.event_id)).foreach { e =>
-            val day = Math.floorDiv(epochUs(e.ts), DayUs)
-            val u = micros(e.value)
-            if (s.openDay == Long.MinValue) s = s.copy(openDay = day, openRevU = u)
-            else if (day > s.openDay) {
+          it.toSeq.sortBy(e => (e.us, e.event_id)).foreach { e =>
+            if (s.openDay == Long.MinValue) s = s.copy(openDay = e.day, openRevU = e.u)
+            else if (e.day > s.openDay) {
               close()
-              s = EmaState(day, u, s.window.filter(_.day >= day - 15))
-            } else s = s.copy(openRevU = s.openRevU + u) // same or late day
+              s = EmaState(e.day, e.u, s.window.filter(_.day >= e.day - 15))
+            } else s = s.copy(openRevU = s.openRevU + e.u) // same or late day
           }
           state.update(s)
           out.result().iterator
@@ -644,262 +644,166 @@ object EventStream {
 
   // ------------------------------------------------------------------
   // Streaming statistical-test twins (incremental forms of the batch
-  // ev_welch_ttest / ev_mannwhitney / ev_roc_auc keys)
+  // Stats keys)
   // ------------------------------------------------------------------
 
-  /** Exact cents conversion matching the batch `round(value*100)
-    * .cast("long")` chain bit-for-bit: Spark's Round on a double goes
-    * through `BigDecimal.valueOf` (shortest decimal representation)
-    * with HALF_UP, then the integral double truncates exactly. */
-  private def cents(v: Double): Long =
-    java.math.BigDecimal.valueOf(v * 100)
-      .setScale(0, java.math.RoundingMode.HALF_UP).doubleValue().toLong
+  /** Streaming `welchTTest`: [[graft.operators.Stats.welchTTestOf]] run
+    * on the event stream (update mode). Per-weekday state is the six
+    * BIGINT moments of its one aggregate — order-free integer addition,
+    * so no sort and no event buffering — and every update row goes
+    * through the batch tail itself, so the last row per weekday IS the
+    * batch answer. The state never grows with the stream — the
+    * production shape for a continuously-monitored A/B metric. */
+  def welchStream(spark: SparkSession, eventsDir: String): DataFrame =
+    Stats.welchTTestOf(readEvents(spark, eventsDir))
 
-  private val DayUsStat: Long = 86400000000L
+  /** Streaming twin of `ev_student_ttest`:
+    * [[graft.operators.Stats.studentTTestOf]] run on the event stream,
+    * over the same six-BIGINT moment state as [[welchStream]]. */
+  def studentStream(spark: SparkSession, eventsDir: String): DataFrame =
+    Stats.studentTTestOf(readEvents(spark, eventsDir))
 
-  case class WelchState(n1: Long, s11: Long, s21: Long,
-      n2: Long, s12: Long, s22: Long)
-  case class WelchOut(wd: Long, n_purchase: Long, n_view: Long,
-      mean_purchase: Option[Double], mean_view: Option[Double],
-      t_stat: Option[Double], df: Option[Double])
+  case class RankState(m: Map[Long, (Long, Long)])
 
-  /** Streaming `welchTTest`: the incremental twin of
-    * [[graft.operators.Stats.welchTTest]]. Per-WEEKDAY state is six
-    * BIGINTs — n / Σcents / Σcents² per arm — truly bounded (the
-    * moment fold is order-free integer addition, so no sort and no
-    * event buffering); every update row recomputes the t statistic and
-    * Welch–Satterthwaite df through the identical fixed IEEE chain as
-    * the batch tail, so the final row is bit-equal to the batch
-    * answer. The state never grows with the stream — the production
-    * shape for a continuously-monitored A/B metric. */
-  def welchStream(spark: SparkSession, eventsDir: String): Dataset[WelchOut] = {
+  /** The count-map twin shape shared by the rank-sum, KS and JSD keys.
+    * Per-WEEKDAY state is a (cents value → per-arm counts) map over the
+    * rows of [[graft.operators.Stats.twoArm]] — the batch keys' own
+    * projection, so weekday and cents are never re-typed here — bounded
+    * by the VALUE DOMAIN rather than the stream length. That count map
+    * is what makes rank statistics incremental at all (ranks themselves
+    * are non-mergeable); streaming admits one aggregation per query,
+    * so the batch counts-then-window plan cannot run as a stream.
+    * Every update hands the weekday and its whole map to `tail`, the
+    * key's own exact-integer walk and IEEE chain. */
+  private def armCountTwin[O <: Product : TypeTag](spark: SparkSession,
+      eventsDir: String)(tail: (Long, Map[Long, (Long, Long)]) => O): Dataset[O] = {
     import spark.implicits._
-    val evs = readEvents(spark, eventsDir)
-      .filter(col("event_type").isin("view", "purchase"))
-      .select(col("event_id"), col("ts"), col("user_id"),
-        col("event_type"), col("value"))
-      .as[Ev]
-    evs.groupByKey(e => epochUs(e.ts) / DayUsStat % 7)
-      .mapGroupsWithState[WelchState, WelchOut](GroupStateTimeout.NoTimeout()) {
-        (wd: Long, it: Iterator[Ev], state: GroupState[WelchState]) =>
-          var s = state.getOption.getOrElse(WelchState(0L, 0L, 0L, 0L, 0L, 0L))
-          it.foreach { e =>
-            val c = cents(e.value)
-            if (e.event_type == "purchase")
-              s = s.copy(n1 = s.n1 + 1, s11 = s.s11 + c, s21 = s.s21 + c * c)
-            else
-              s = s.copy(n2 = s.n2 + 1, s12 = s.s12 + c, s22 = s.s22 + c * c)
+    Stats.twoArm(readEvents(spark, eventsDir)).as[(Long, Long, Boolean)]
+      .groupByKey(_._1)
+      .mapGroupsWithState[RankState, O](GroupStateTimeout.NoTimeout()) {
+        (wd: Long, it: Iterator[(Long, Long, Boolean)],
+            state: GroupState[RankState]) =>
+          var m = state.getOption.map(_.m).getOrElse(Map.empty[Long, (Long, Long)])
+          it.foreach { case (_, c, isP) =>
+            val (a, b) = m.getOrElse(c, (0L, 0L))
+            m = m.updated(c, if (isP) (a + 1, b) else (a, b + 1))
           }
-          state.update(s)
-          // fixed IEEE tail, op-for-op the batch chain
-          val v1 = if (s.n1 > 1)
-            Some((s.s21.toDouble - s.s11.toDouble * s.s11.toDouble / s.n1.toDouble) /
-              (s.n1.toDouble - 1.0)) else None
-          val v2 = if (s.n2 > 1)
-            Some((s.s22.toDouble - s.s12.toDouble * s.s12.toDouble / s.n2.toDouble) /
-              (s.n2.toDouble - 1.0)) else None
-          val se1 = v1.map(_ / s.n1.toDouble)
-          val se2 = v2.map(_ / s.n2.toDouble)
-          val se = for { a <- se1; b <- se2 } yield a + b
-          WelchOut(wd, s.n1, s.n2,
-            if (s.n1 > 0) Some(s.s11.toDouble / s.n1.toDouble) else None,
-            if (s.n2 > 0) Some(s.s12.toDouble / s.n2.toDouble) else None,
-            se.filter(_ > 0).map(x =>
-              (s.s11.toDouble / s.n1.toDouble - s.s12.toDouble / s.n2.toDouble) /
-                math.sqrt(x)),
-            se.filter(_ > 0).map(x =>
-              x * x / (se1.get * se1.get / (s.n1.toDouble - 1.0) +
-                se2.get * se2.get / (s.n2.toDouble - 1.0))))
+          state.update(RankState(m))
+          tail(wd, m)
       }
   }
 
-  case class RankState(m: Map[Long, (Long, Long)])
   case class RankOut(wd: Long, n_purchase: Long, n_view: Long,
       u1: Double, z: Option[Double], auc: Option[Double])
 
   /** Streaming rank-sum core: the incremental twin of the batch
     * `ev_mannwhitney` AND `ev_roc_auc` keys (one state serves both —
-    * they share [[graft.operators.Events]]' rankSumCore). Per-WEEKDAY
-    * state is a (cents value → per-arm counts) map, bounded by the
-    * VALUE DOMAIN rather than the stream length — the count-map device
-    * that makes rank statistics incremental at all (ranks themselves
-    * are non-mergeable). Every update replays the doubled-rank walk
-    * over the sorted map: 2R₁/2U₁/tie cubic sum stay exact BIGINTs and
-    * the z / AUC tails are the batch's fixed IEEE chains, so final
-    * rows are bit-equal to both batch keys. A value domain too large
-    * to bound (true continuous scores) is the documented limit — there
-    * the batch counts-then-window form is the scalable path. */
-  def rankStatsStream(spark: SparkSession, eventsDir: String): Dataset[RankOut] = {
-    import spark.implicits._
-    val evs = readEvents(spark, eventsDir)
-      .filter(col("event_type").isin("view", "purchase"))
-      .select(col("event_id"), col("ts"), col("user_id"),
-        col("event_type"), col("value"))
-      .as[Ev]
-    evs.groupByKey(e => epochUs(e.ts) / DayUsStat % 7)
-      .mapGroupsWithState[RankState, RankOut](GroupStateTimeout.NoTimeout()) {
-        (wd: Long, it: Iterator[Ev], state: GroupState[RankState]) =>
-          var m = state.getOption.map(_.m).getOrElse(Map.empty[Long, (Long, Long)])
-          it.foreach { e =>
-            val c = cents(e.value)
-            val (a, b) = m.getOrElse(c, (0L, 0L))
-            m = m.updated(c,
-              if (e.event_type == "purchase") (a + 1, b) else (a, b + 1))
-          }
-          state.update(RankState(m))
-          var n1 = 0L; var n2 = 0L; var twoR1 = 0L; var tiesum = 0L
-          var less = 0L
-          m.toSeq.sortBy(_._1).foreach { case (_, (c1, c2)) =>
-            val ct = c1 + c2
-            twoR1 += c1 * (2L * less + ct + 1L)
-            tiesum += ct * ct * ct - ct
-            n1 += c1; n2 += c2; less += ct
-          }
-          val n = n1 + n2
-          val twoU1 = twoR1 - n1 * (n1 + 1L)
-          val varu = if (n1 > 0 && n2 > 0 && n > 1)
-            Some(n1.toDouble * n2.toDouble / 12.0 *
-              ((n.toDouble + 1.0) -
-                tiesum.toDouble / (n.toDouble * (n.toDouble - 1.0)))) else None
-          RankOut(wd, n1, n2,
-            twoU1.toDouble / 2.0,
-            varu.filter(_ > 0).map(v =>
-              (twoU1 - n1 * n2).toDouble / (2.0 * math.sqrt(v))),
-            if (n1 > 0 && n2 > 0)
-              Some(twoU1.toDouble / (2.0 * (n1 * n2).toDouble)) else None)
+    * they share `Stats`' rankSumCore). Every update replays the
+    * doubled-rank walk over the sorted map: 2R₁/2U₁/tie cubic sum stay
+    * exact BIGINTs and the z / AUC tails are the batch's fixed IEEE
+    * chains, so final rows are bit-equal to both batch keys. A value
+    * domain too large to bound (true continuous scores) is the
+    * documented limit — there the batch counts-then-window form is the
+    * scalable path. */
+  def rankStatsStream(spark: SparkSession, eventsDir: String): Dataset[RankOut] =
+    armCountTwin[RankOut](spark, eventsDir) { (wd, m) =>
+      var n1 = 0L; var n2 = 0L; var twoR1 = 0L; var tiesum = 0L
+      var less = 0L
+      m.toSeq.sortBy(_._1).foreach { case (_, (c1, c2)) =>
+        val ct = c1 + c2
+        twoR1 += c1 * (2L * less + ct + 1L)
+        tiesum += ct * ct * ct - ct
+        n1 += c1; n2 += c2; less += ct
       }
-  }
-
-  case class StudentOut(wd: Long, n_purchase: Long, n_view: Long,
-      t_stat: Option[Double], df: Long)
-
-  /** Streaming twin of `ev_student_ttest`: the SAME six-BIGINT moment
-    * state as [[welchStream]] (the two keys share the batch moment
-    * core), with the pooled-variance tail replayed op-for-op — final
-    * rows bit-equal to the batch key. */
-  def studentStream(spark: SparkSession, eventsDir: String): Dataset[StudentOut] = {
-    import spark.implicits._
-    val evs = readEvents(spark, eventsDir)
-      .filter(col("event_type").isin("view", "purchase"))
-      .select(col("event_id"), col("ts"), col("user_id"),
-        col("event_type"), col("value"))
-      .as[Ev]
-    evs.groupByKey(e => epochUs(e.ts) / DayUsStat % 7)
-      .mapGroupsWithState[WelchState, StudentOut](GroupStateTimeout.NoTimeout()) {
-        (wd: Long, it: Iterator[Ev], state: GroupState[WelchState]) =>
-          var s = state.getOption.getOrElse(WelchState(0L, 0L, 0L, 0L, 0L, 0L))
-          it.foreach { e =>
-            val c = cents(e.value)
-            if (e.event_type == "purchase")
-              s = s.copy(n1 = s.n1 + 1, s11 = s.s11 + c, s21 = s.s21 + c * c)
-            else
-              s = s.copy(n2 = s.n2 + 1, s12 = s.s12 + c, s22 = s.s22 + c * c)
-          }
-          state.update(s)
-          val ss1 = if (s.n1 > 0)
-            Some(s.s21.toDouble - s.s11.toDouble * s.s11.toDouble / s.n1.toDouble)
-          else None
-          val ss2 = if (s.n2 > 0)
-            Some(s.s22.toDouble - s.s12.toDouble * s.s12.toDouble / s.n2.toDouble)
-          else None
-          val sp2 = if (s.n1 + s.n2 > 2)
-            for { a <- ss1; b <- ss2 } yield
-              (a + b) / (s.n1.toDouble + s.n2.toDouble - 2.0)
-          else None
-          val se = sp2.map(v =>
-            math.sqrt(v * (1.0 / s.n1.toDouble + 1.0 / s.n2.toDouble)))
-          StudentOut(wd, s.n1, s.n2,
-            se.filter(_ > 0).map(x =>
-              (s.s11.toDouble / s.n1.toDouble - s.s12.toDouble / s.n2.toDouble) / x),
-            s.n1 + s.n2 - 2)
-      }
-  }
+      val n = n1 + n2
+      val twoU1 = twoR1 - n1 * (n1 + 1L)
+      val varu = if (n1 > 0 && n2 > 0 && n > 1)
+        Some(n1.toDouble * n2.toDouble / 12.0 *
+          ((n.toDouble + 1.0) -
+            tiesum.toDouble / (n.toDouble * (n.toDouble - 1.0)))) else None
+      RankOut(wd, n1, n2,
+        twoU1.toDouble / 2.0,
+        varu.filter(_ > 0).map(v =>
+          (twoU1 - n1 * n2).toDouble / (2.0 * math.sqrt(v))),
+        if (n1 > 0 && n2 > 0)
+          Some(twoU1.toDouble / (2.0 * (n1 * n2).toDouble)) else None)
+    }
 
   case class KsOut(wd: Long, n_purchase: Long, n_view: Long,
       d_stat: Option[Double], ks_stat: Option[Double])
 
-  /** Streaming twin of `ev_ks_test`: the SAME value-domain-bounded
-    * per-weekday count map as [[rankStatsStream]] (KS and rank stats
-    * both live on the per-cents two-arm counts); each update replays
-    * the cumulative walk — D·n₁n₂ stays an exact BIGINT max — and the
-    * two-double tail lands bit-equal to the batch key. */
-  def ksStream(spark: SparkSession, eventsDir: String): Dataset[KsOut] = {
-    import spark.implicits._
-    val evs = readEvents(spark, eventsDir)
-      .filter(col("event_type").isin("view", "purchase"))
-      .select(col("event_id"), col("ts"), col("user_id"),
-        col("event_type"), col("value"))
-      .as[Ev]
-    evs.groupByKey(e => epochUs(e.ts) / DayUsStat % 7)
-      .mapGroupsWithState[RankState, KsOut](GroupStateTimeout.NoTimeout()) {
-        (wd: Long, it: Iterator[Ev], state: GroupState[RankState]) =>
-          var m = state.getOption.map(_.m).getOrElse(Map.empty[Long, (Long, Long)])
-          it.foreach { e =>
-            val c = cents(e.value)
-            val (a, b) = m.getOrElse(c, (0L, 0L))
-            m = m.updated(c,
-              if (e.event_type == "purchase") (a + 1, b) else (a, b + 1))
-          }
-          state.update(RankState(m))
-          val n1 = m.values.map(_._1).sum
-          val n2 = m.values.map(_._2).sum
-          var cum1 = 0L; var cum2 = 0L; var dmax = 0L
-          m.toSeq.sortBy(_._1).foreach { case (_, (a, b)) =>
-            cum1 += a; cum2 += b
-            dmax = math.max(dmax, math.abs(cum1 * n2 - cum2 * n1))
-          }
-          val ok = n1 > 0 && n2 > 0
-          val dStat = if (ok) Some(dmax.toDouble / (n1 * n2).toDouble) else None
-          KsOut(wd, n1, n2, dStat,
-            if (ok) Some(
-              math.sqrt(n1.toDouble * n2.toDouble / (n1.toDouble + n2.toDouble)) *
-                (dmax.toDouble / (n1 * n2).toDouble)) else None)
+  /** Streaming twin of `ev_ks_test` over the shared count map: each
+    * update replays the cumulative walk — D·n₁n₂ stays an exact BIGINT
+    * max — and the two-double tail lands bit-equal to the batch key. */
+  def ksStream(spark: SparkSession, eventsDir: String): Dataset[KsOut] =
+    armCountTwin[KsOut](spark, eventsDir) { (wd, m) =>
+      val n1 = m.values.map(_._1).sum
+      val n2 = m.values.map(_._2).sum
+      var cum1 = 0L; var cum2 = 0L; var dmax = 0L
+      m.toSeq.sortBy(_._1).foreach { case (_, (a, b)) =>
+        cum1 += a; cum2 += b
+        dmax = math.max(dmax, math.abs(cum1 * n2 - cum2 * n1))
       }
-  }
+      val ok = n1 > 0 && n2 > 0
+      val dStat = if (ok) Some(dmax.toDouble / (n1 * n2).toDouble) else None
+      KsOut(wd, n1, n2, dStat,
+        if (ok) Some(
+          math.sqrt(n1.toDouble * n2.toDouble / (n1.toDouble + n2.toDouble)) *
+            (dmax.toDouble / (n1 * n2).toDouble)) else None)
+    }
 
   case class JsdOut(wd: Long, n_purchase: Long, n_view: Long,
       jsd_bits: Option[Double])
 
-  /** Streaming twin of `ev_js_divergence`: same per-weekday two-arm
-    * count map; each update replays the exact T_P/T_Q integer cores
-    * with [[graft.functions.FixedLog2.l2Long]] and the 4-op IEEE tail
-    * — bit-equal to the batch key. */
+  /** Streaming twin of `ev_js_divergence` over the shared count map:
+    * each update replays the exact T_P/T_Q integer cores with
+    * [[graft.functions.FixedLog2.l2Long]] and the 4-op IEEE tail —
+    * bit-equal to the batch key. */
   def jsdStream(spark: SparkSession, eventsDir: String): Dataset[JsdOut] = {
-    import spark.implicits._
     import graft.functions.FixedLog2.l2Long
-    val evs = readEvents(spark, eventsDir)
-      .filter(col("event_type").isin("view", "purchase"))
-      .select(col("event_id"), col("ts"), col("user_id"),
-        col("event_type"), col("value"))
-      .as[Ev]
-    evs.groupByKey(e => epochUs(e.ts) / DayUsStat % 7)
-      .mapGroupsWithState[RankState, JsdOut](GroupStateTimeout.NoTimeout()) {
-        (wd: Long, it: Iterator[Ev], state: GroupState[RankState]) =>
-          var m = state.getOption.map(_.m).getOrElse(Map.empty[Long, (Long, Long)])
-          it.foreach { e =>
-            val c = cents(e.value)
-            val (a, b) = m.getOrElse(c, (0L, 0L))
-            m = m.updated(c,
-              if (e.event_type == "purchase") (a + 1, b) else (a, b + 1))
+    armCountTwin[JsdOut](spark, eventsDir) { (wd, m) =>
+      val n1 = m.values.map(_._1).sum
+      val n2 = m.values.map(_._2).sum
+      val ok = n1 > 0 && n2 > 0
+      val jsd = if (!ok) None else {
+        val tw = 2L * n1 * n2
+        var tp = BigInt(0); var tq = BigInt(0)
+        m.values.foreach { case (a, b) =>
+          val marg = a * n2 + b * n1
+          if (a > 0)
+            tp += BigInt(a) * (l2Long(a) + l2Long(tw) - l2Long(n1) - l2Long(marg))
+          if (b > 0)
+            tq += BigInt(b) * (l2Long(b) + l2Long(tw) - l2Long(n2) - l2Long(marg))
+        }
+        Some((tp.toLong.toDouble / n1.toDouble +
+          tq.toLong.toDouble / n2.toDouble) / 2097152.0)
+      }
+      JsdOut(wd, n1, n2, jsd)
+    }
+  }
+
+  case class TuState(m: Map[String, Long])
+
+  /** The contingency twin shape shared by the χ² and Theil's U keys: ONE
+    * global state, the (event type × weekday) count map over the rows of
+    * [[graft.operators.Stats.typeWeekday]] — the batch grid's own axes —
+    * bounded by both grids' value domains (≤ a few dozen cells). The
+    * map key is the encoded "type:wd" string (Spark state encoders don't
+    * take tuple map keys). Every update hands the whole map to `tail`. */
+  private def contingencyTwin[O <: Product : TypeTag](spark: SparkSession,
+      eventsDir: String)(tail: Map[String, Long] => O): Dataset[O] = {
+    import spark.implicits._
+    Stats.typeWeekday(readEvents(spark, eventsDir)).as[(String, Long)]
+      .groupByKey(_ => 0)
+      .mapGroupsWithState[TuState, O](GroupStateTimeout.NoTimeout()) {
+        (_: Int, it: Iterator[(String, Long)], state: GroupState[TuState]) =>
+          var m = state.getOption.map(_.m).getOrElse(Map.empty[String, Long])
+          it.foreach { case (tpe, wd) =>
+            val key = s"$tpe:$wd"
+            m = m.updated(key, m.getOrElse(key, 0L) + 1L)
           }
-          state.update(RankState(m))
-          val n1 = m.values.map(_._1).sum
-          val n2 = m.values.map(_._2).sum
-          val ok = n1 > 0 && n2 > 0
-          val jsd = if (!ok) None else {
-            val tw = 2L * n1 * n2
-            var tp = BigInt(0); var tq = BigInt(0)
-            m.values.foreach { case (a, b) =>
-              val marg = a * n2 + b * n1
-              if (a > 0)
-                tp += BigInt(a) * (l2Long(a) + l2Long(tw) - l2Long(n1) - l2Long(marg))
-              if (b > 0)
-                tq += BigInt(b) * (l2Long(b) + l2Long(tw) - l2Long(n2) - l2Long(marg))
-            }
-            Some((tp.toLong.toDouble / n1.toDouble +
-              tq.toLong.toDouble / n2.toDouble) / 2097152.0)
-          }
-          JsdOut(wd, n1, n2, jsd)
+          state.update(TuState(m))
+          tail(m)
       }
   }
 
@@ -937,67 +841,38 @@ object EventStream {
     (n, r.size.toLong, c.size.toLong, chi2Micro)
   }
 
-  /** Streaming twin of `ev_cramers_v`: ONE global (type × weekday)
-    * count-map state — [[theilsUStream]]'s device — replaying the
-    * quantized-χ² core per update; bit-equal to the batch key. */
-  def cramersVStream(spark: SparkSession, eventsDir: String): Dataset[CramersOut] = {
-    import spark.implicits._
-    val evs = readEvents(spark, eventsDir)
-      .select(col("event_type"), col("ts")).as[TuEv]
-    evs.groupByKey(_ => 0)
-      .mapGroupsWithState[TuState, CramersOut](GroupStateTimeout.NoTimeout()) {
-        (_: Int, it: Iterator[TuEv], state: GroupState[TuState]) =>
-          val m = foldContingency(it,
-            state.getOption.map(_.m).getOrElse(Map.empty))
-          state.update(TuState(m))
-          val (n, nr, nc, chi2Micro) = chiSqReplay(m)
-          CramersOut(n, chi2Micro.toDouble / 1e6, (nr - 1) * (nc - 1),
-            if (n > 0 && math.min(nr, nc) > 1)
-              Some(math.sqrt((chi2Micro.toDouble / 1e6) /
-                (n.toDouble * (math.min(nr, nc).toDouble - 1.0))))
-            else None)
-      }
-  }
+  /** Streaming twin of `ev_cramers_v`: the global contingency count
+    * map, replaying the quantized-χ² core per update; bit-equal to the
+    * batch key. */
+  def cramersVStream(spark: SparkSession, eventsDir: String): Dataset[CramersOut] =
+    contingencyTwin[CramersOut](spark, eventsDir) { m =>
+      val (n, nr, nc, chi2Micro) = chiSqReplay(m)
+      CramersOut(n, chi2Micro.toDouble / 1e6, (nr - 1) * (nc - 1),
+        if (n > 0 && math.min(nr, nc) > 1)
+          Some(math.sqrt((chi2Micro.toDouble / 1e6) /
+            (n.toDouble * (math.min(nr, nc).toDouble - 1.0))))
+        else None)
+    }
 
   /** Streaming twin of `ev_contingency` (Pearson's C + bias-corrected
-    * Cramér's V): same global count-map state, the Bergsma tail
-    * replayed op-for-op — bit-equal to the batch key. */
-  def contingencyStream(spark: SparkSession, eventsDir: String): Dataset[ContingencyOut] = {
-    import spark.implicits._
-    val evs = readEvents(spark, eventsDir)
-      .select(col("event_type"), col("ts")).as[TuEv]
-    evs.groupByKey(_ => 0)
-      .mapGroupsWithState[TuState, ContingencyOut](GroupStateTimeout.NoTimeout()) {
-        (_: Int, it: Iterator[TuEv], state: GroupState[TuState]) =>
-          val m = foldContingency(it,
-            state.getOption.map(_.m).getOrElse(Map.empty))
-          state.update(TuState(m))
-          val (n, nr, nc, chi2Micro) = chiSqReplay(m)
-          val chi2 = chi2Micro.toDouble / 1e6
-          val phi2 = chi2 / n.toDouble
-          val phi2c = math.max(0.0, phi2 -
-            (nr.toDouble - 1.0) * (nc.toDouble - 1.0) / (n.toDouble - 1.0))
-          val nrc = nr.toDouble -
-            (nr.toDouble - 1.0) * (nr.toDouble - 1.0) / (n.toDouble - 1.0)
-          val ncc = nc.toDouble -
-            (nc.toDouble - 1.0) * (nc.toDouble - 1.0) / (n.toDouble - 1.0)
-          ContingencyOut(n, chi2,
-            if (n > 0) Some(math.sqrt(chi2 / (chi2 + n.toDouble))) else None,
-            if (n > 1 && math.min(nrc, ncc) > 1)
-              Some(math.sqrt(phi2c / (math.min(nrc, ncc) - 1.0))) else None)
-      }
-  }
-
-  private def foldContingency(it: Iterator[TuEv],
-      m0: Map[String, Long]): Map[String, Long] = {
-    var m = m0
-    it.foreach { e =>
-      val wd = epochUs(e.ts) / DayUsStat % 7
-      val key = s"${e.event_type}:$wd"
-      m = m.updated(key, m.getOrElse(key, 0L) + 1L)
+    * Cramér's V): same global count-map state, then the Bergsma tail —
+    * bit-equal to the batch key. */
+  def contingencyStream(spark: SparkSession, eventsDir: String): Dataset[ContingencyOut] =
+    contingencyTwin[ContingencyOut](spark, eventsDir) { m =>
+      val (n, nr, nc, chi2Micro) = chiSqReplay(m)
+      val chi2 = chi2Micro.toDouble / 1e6
+      val phi2 = chi2 / n.toDouble
+      val phi2c = math.max(0.0, phi2 -
+        (nr.toDouble - 1.0) * (nc.toDouble - 1.0) / (n.toDouble - 1.0))
+      val nrc = nr.toDouble -
+        (nr.toDouble - 1.0) * (nr.toDouble - 1.0) / (n.toDouble - 1.0)
+      val ncc = nc.toDouble -
+        (nc.toDouble - 1.0) * (nc.toDouble - 1.0) / (n.toDouble - 1.0)
+      ContingencyOut(n, chi2,
+        if (n > 0) Some(math.sqrt(chi2 / (chi2 + n.toDouble))) else None,
+        if (n > 1 && math.min(nrc, ncc) > 1)
+          Some(math.sqrt(phi2c / (math.min(nrc, ncc) - 1.0))) else None)
     }
-    m
-  }
 
   case class EntEv(event_type: String, k: Option[Long])
   case class EntState(m: Map[Long, Long])
@@ -1041,50 +916,36 @@ object EventStream {
       }
   }
 
-  case class TuEv(event_type: String, ts: java.sql.Timestamp)
-  case class TuState(m: Map[String, Long])
   case class TuOut(n: Long, h_type: Double, h_wd: Double, mi_bits: Double,
       theils_u: Option[Double], theils_u_rev: Option[Double])
 
-  /** Streaming twin of `ev_theils_u`: ONE global state — the
-    * contingency count map over (event type × weekday), bounded by
-    * both grids' value domains (≤ a few dozen cells). Each update
-    * replays the exact integer cores S_I / S_HX / S_HY with
+  /** Streaming twin of `ev_theils_u`: the global contingency count map;
+    * each update replays the exact integer cores S_I / S_HX / S_HY with
     * [[graft.functions.FixedLog2.l2Long]] and emits the batch tail's
-    * single-division doubles — bit-equal to the batch key. The map key
-    * is the encoded "type:wd" string (Spark state encoders don't take
-    * tuple map keys). */
+    * single-division doubles — bit-equal to the batch key. */
   def theilsUStream(spark: SparkSession, eventsDir: String): Dataset[TuOut] = {
-    import spark.implicits._
     import graft.functions.FixedLog2
-    val evs = readEvents(spark, eventsDir)
-      .select(col("event_type"), col("ts")).as[TuEv]
-    evs.groupByKey(_ => 0)
-      .mapGroupsWithState[TuState, TuOut](GroupStateTimeout.NoTimeout()) {
-        (_: Int, it: Iterator[TuEv], state: GroupState[TuState]) =>
-          val m = foldContingency(it,
-            state.getOption.map(_.m).getOrElse(Map.empty))
-          state.update(TuState(m))
-          val cells = m.toSeq.map { case (k, o) =>
-            val i = k.lastIndexOf(':')
-            (k.substring(0, i), k.substring(i + 1).toLong, o)
-          }
-          val nn = cells.map(_._3).sum
-          val r = cells.groupBy(_._1).view.mapValues(_.map(_._3).sum).toMap
-          val c = cells.groupBy(_._2).view.mapValues(_.map(_._3).sum).toMap
-          def l2(a: Long) = FixedLog2.l2Long(a)
-          val sI = cells.map { case (t, w, o) =>
-            BigInt(o) * (l2(o) + l2(nn) - l2(r(t)) - l2(c(w))) }.sum
-          val sHx = r.values.map(v => BigInt(v) * (l2(nn) - l2(v))).sum
-          val sHy = c.values.map(v => BigInt(v) * (l2(nn) - l2(v))).sum
-          val den = (nn * FixedLog2.Unit).toDouble
-          TuOut(nn,
-            sHx.toLong.toDouble / den,
-            sHy.toLong.toDouble / den,
-            sI.toLong.toDouble / den,
-            if (sHx > 0) Some(sI.toLong.toDouble / sHx.toLong.toDouble) else None,
-            if (sHy > 0) Some(sI.toLong.toDouble / sHy.toLong.toDouble) else None)
+    contingencyTwin[TuOut](spark, eventsDir) { m =>
+      val cells = m.toSeq.map { case (k, o) =>
+        val i = k.lastIndexOf(':')
+        (k.substring(0, i), k.substring(i + 1).toLong, o)
       }
+      val nn = cells.map(_._3).sum
+      val r = cells.groupBy(_._1).view.mapValues(_.map(_._3).sum).toMap
+      val c = cells.groupBy(_._2).view.mapValues(_.map(_._3).sum).toMap
+      def l2(a: Long) = FixedLog2.l2Long(a)
+      val sI = cells.map { case (t, w, o) =>
+        BigInt(o) * (l2(o) + l2(nn) - l2(r(t)) - l2(c(w))) }.sum
+      val sHx = r.values.map(v => BigInt(v) * (l2(nn) - l2(v))).sum
+      val sHy = c.values.map(v => BigInt(v) * (l2(nn) - l2(v))).sum
+      val den = (nn * FixedLog2.Unit).toDouble
+      TuOut(nn,
+        sHx.toLong.toDouble / den,
+        sHy.toLong.toDouble / den,
+        sI.toLong.toDouble / den,
+        if (sHx > 0) Some(sI.toLong.toDouble / sHx.toLong.toDouble) else None,
+        if (sHy > 0) Some(sI.toLong.toDouble / sHy.toLong.toDouble) else None)
+    }
   }
 
   case class GridState(m: Map[Long, Long])
@@ -1100,8 +961,10 @@ object EventStream {
     * volume, so per-type state is ONE count map keyed by the Euclidean
     * composite bucket·24+hour (floorDiv/floorMod decode; both factors
     * non-negative by construction — cents clamp to ≥ 1 before the
-    * log). The bucket comes from [[graft.functions.FixedLog2.l2Long]],
-    * the JVM twin of the codegen'd batch expression. Every update
+    * log). The cents and hour axes are the batch key's own projection
+    * ([[graft.operators.Stats.bucketAxes]]); the bucket comes from
+    * [[graft.functions.FixedLog2.l2Long]], the JVM twin of the
+    * codegen'd batch log. Every update
     * replays both doubled-rank walks over the sorted marginals and the
     * five Pearson moments as exact BigInts, then the batch tail's
     * 2³²-split → one multiply + √ + divide — emissions bit-equal to
@@ -1109,24 +972,21 @@ object EventStream {
   def rankCorrStream(spark: SparkSession,
       eventsDir: String): Dataset[RankCorrOut] = {
     import spark.implicits._
-    val evs = readEvents(spark, eventsDir)
-      .select(col("event_id"), col("ts"), col("user_id"),
-        col("event_type"), col("value"))
-      .as[Ev]
+    import graft.functions.FixedLog2
     val B = 4294967296L
     def split(v: BigInt): Double = {
       val lo = v % B // truncated %, the batch/oracle convention
       val hi = (v - lo) / B // < 2^53 by the rankCorr headroom bound
       hi.toDouble * 4294967296.0 + lo.toDouble
     }
-    evs.groupByKey(_.event_type)
+    Stats.bucketAxes(readEvents(spark, eventsDir)).as[(String, Long, Long)]
+      .groupByKey(_._1)
       .mapGroupsWithState[GridState, RankCorrOut](GroupStateTimeout.NoTimeout()) {
-        (tpe: String, it: Iterator[Ev], state: GroupState[GridState]) =>
+        (tpe: String, it: Iterator[(String, Long, Long)],
+            state: GroupState[GridState]) =>
           var m = state.getOption.map(_.m).getOrElse(Map.empty[Long, Long])
-          it.foreach { e =>
-            val h = epochUs(e.ts) % DayUsStat / 3600000000L
-            val b = graft.functions.FixedLog2.l2Long(
-              math.max(cents(e.value), 1L)) / (graft.functions.FixedLog2.Unit / 8)
+          it.foreach { case (_, c, h) =>
+            val b = FixedLog2.l2Long(c) / (FixedLog2.Unit / 8)
             m = m.updated(b * 24L + h, m.getOrElse(b * 24L + h, 0L) + 1L)
           }
           state.update(GridState(m))

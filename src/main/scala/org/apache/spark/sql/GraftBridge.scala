@@ -205,6 +205,19 @@ object GraftBridge {
       replication = replicas)
   }
 
+  /** Whether `df` is already pinned: persisted through the
+    * `CacheManager`, or a checkpoint (`Dataset.localCheckpoint` or
+    * [[checkpoint]]) — one `LogicalRDD` over a persisted RDD, which
+    * `Dataset.storageLevel` never sees. A loop reuses a pinned input
+    * instead of pinning a second copy. */
+  def isPinned(df: DataFrame): Boolean =
+    df.storageLevel != org.apache.spark.storage.StorageLevel.NONE ||
+      (df.queryExecution.analyzed match {
+        case lr: execution.LogicalRDD =>
+          lr.rdd.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE
+        case _ => false
+      })
+
   /** Actually free a `localCheckpoint`ed frame's pinned blocks.
     *
     * `Dataset.unpersist()` only consults the `CacheManager`, which

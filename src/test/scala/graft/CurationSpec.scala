@@ -2,6 +2,7 @@ package graft
 
 import graft.operators.{Curation, Dedup}
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 class CurationSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -152,6 +153,54 @@ class CurationSpec extends AnyFunSuite {
       assert(pinned.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
       assert(Curation.pageRankOf(pinned).as[(Long, Double)].collect().toSet == want)
     } finally pinned.unpersist()
+  }
+
+  test("pagerank: a checkpointed edge frame is reused, not pinned a second time") {
+    // the shared co-purchase caches are localCheckpoints, which
+    // Dataset.storageLevel never sees; pageRankOf must reuse one as it
+    // reuses a CacheManager-persisted frame, so only an unpinned input
+    // pins (and later releases) a copy of its own
+    val edges = (0L until 200L).map(i => (i % 37, (i * 7 + 3) % 37))
+      .filter { case (a, b) => a != b }.toDF("src", "dst")
+    val sc = spark.sparkContext
+    // RDDs one call pins: those still persistent after it, plus those
+    // it released on the way (RDD ids grow, so an id below the call's
+    // first is an older RDD the cleaner dropped meanwhile)
+    def pinnedBy(df: org.apache.spark.sql.DataFrame): Int = {
+      val released = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onUnpersistRDD(
+            e: org.apache.spark.scheduler.SparkListenerUnpersistRDD): Unit =
+          released.add(e.rddId)
+      }
+      org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
+      val first = sc.emptyRDD[Int].id
+      sc.addSparkListener(listener)
+      val ranks = try {
+        val r = Curation.pageRankOf(df)
+        org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
+        r
+      } finally sc.removeSparkListener(listener)
+      val pinned = sc.getPersistentRDDs.keySet ++ released.asScala
+      org.apache.spark.sql.GraftBridge.releaseLocalCheckpoint(ranks)
+      pinned.count(_ > first)
+    }
+    val unpinned = pinnedBy(edges)
+    val ck = edges.localCheckpoint(true,
+      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+    // persist() pins `edges` itself, so it comes after the unpinned call
+    val persisted = edges.persist()
+    try {
+      persisted.count()
+      val (checkpointed, cached) = (pinnedBy(ck), pinnedBy(persisted))
+      assert(unpinned == cached + 1,
+        s"an unpinned input pins its own copy: $unpinned vs $cached")
+      assert(checkpointed == cached,
+        s"a checkpointed input pinned a second copy: $checkpointed vs $cached")
+    } finally {
+      persisted.unpersist()
+      org.apache.spark.sql.GraftBridge.releaseLocalCheckpoint(ck)
+    }
   }
 
   test("funnel: monotone stages that reconcile with the standalone queries") {

@@ -504,6 +504,54 @@ class StreamingSpec extends AnyFunSuite {
     assert(batch.nonEmpty)
   }
 
+  test("Welch, Student and KS twins equal their batch keys ACROSS micro-batches") {
+    // a two-file landing zone drained as TWO micro-batches, so each
+    // weekday's state carries over a batch boundary
+    val d = java.nio.file.Files.createTempDirectory("graft-twins")
+    val ev = graft.sources.Tables.events(spark, TestSpark.Sf)
+    def stage(pred: org.apache.spark.sql.Column, name: String): Unit = {
+      val tmp = java.nio.file.Files.createTempDirectory("graft-twinhalf").toString
+      ev.filter(pred).coalesce(1).write.mode("overwrite").parquet(tmp)
+      val part = new java.io.File(tmp).listFiles()
+        .filter(_.getName.endsWith(".parquet")).head
+      java.nio.file.Files.copy(part.toPath,
+        java.nio.file.Paths.get(d.toString, name))
+    }
+    stage(col("event_id") % 2 === 0, "a.parquet")
+    val twins = Seq(
+      "welch_mb" -> EventStream.welchStream(spark, d.toString),
+      "student_mb" -> EventStream.studentStream(spark, d.toString),
+      "ks_mb" -> EventStream.ksStream(spark, d.toString).toDF())
+    val qs = twins.map { case (name, df) =>
+      df.writeStream.outputMode("update")
+        .format("memory").queryName(name).start()
+    }
+    try {
+      qs.foreach(_.processAllAvailable())
+      stage(col("event_id") % 2 === 1, "b.parquet")
+      qs.foreach(_.processAllAvailable())
+    } finally { qs.foreach(_.stop()) }
+    // every update of a weekday adds rows to n_purchase + n_view, so
+    // its largest total marks its last update row
+    def lastPerWeekday(name: String): Set[org.apache.spark.sql.Row] = {
+      val rows = spark.table(name).collect()
+      assert(rows.length > rows.map(_.getLong(0)).distinct.length,
+        s"$name: some weekday must update in two micro-batches")
+      rows.groupBy(_.getLong(0)).values
+        .map(_.maxBy(r => r.getLong(1) + r.getLong(2))).toSet
+    }
+    Seq("welch_mb" -> Stats.welchTTest(spark, TestSpark.Sf),
+        "student_mb" -> Stats.studentTTest(spark, TestSpark.Sf),
+        "ks_mb" -> Stats.ksTest(spark, TestSpark.Sf))
+      .foreach { case (name, batchKey) =>
+        val batch = batchKey.collect().toSet
+        val streamed = lastPerWeekday(name)
+        assert(streamed == batch,
+          s"$name: missed=${(batch -- streamed).take(2)} extra=${(streamed -- batch).take(2)}")
+        assert(batch.size == 7)
+      }
+  }
+
   test("streaming quantized-chi2 equals batch cramersV AND contingency bit-for-bit") {
     val q1 = EventStream.cramersVStream(spark, eventsDir)
       .writeStream.outputMode("update")
