@@ -9,13 +9,23 @@ import org.apache.spark.sql.functions._
 
 /** Approximate-nearest-neighbor search over the `embeddings` fixture
   * (north-star surface; SURVEY.md §2.3 X3): brute-force cosine top-k as
-  * the exact baseline, then two sub-linear scale paths — random-
-  * hyperplane LSH and IVF (inverted-file) probing with Lloyd-refined
-  * centroids.
+  * the exact baseline, then six sub-linear tiers — random-hyperplane
+  * LSH, IVF (inverted-file) probing with Lloyd-refined centroids, PQ
+  * (product quantization), IVF-PQ, residual IVF-PQ and OPQ (rotated
+  * residual IVF-PQ).
+  *
+  * The six tiers are one search pipeline; a tier is only its choices.
+  * Shared stages: [[queryVecs]] (the query rows), [[cosine]] (the
+  * exact query cosine), `ivfProbes` (each query's nearest cells),
+  * [[adcShortlist]] (the per-query shortlist by PQ asymmetric-distance
+  * score, "ADC") and [[exactRerank]] (exact cosine top-k of a candidate
+  * set); [[pqCodebooks]] trains every tier's codebooks. A tier picks its
+  * candidate source (LSH buckets, probed cells, every code), its codes
+  * and ADC table, and its shortlist score.
   *
   * Scale posture: the query set is small and broadcast; the corpus scan
   * is the only large side, so brute force is one pass, no shuffle on the
-  * corpus — at 100 TB the LSH/IVF variants cut the *rerank* set, and the
+  * corpus — at 100 TB the ANN tiers cut the *rerank* set, and the
   * bucket/centroid assignment is a map-side computation against a
   * reference-object plane array ([[HyperplaneSigs]]) or a broadcast
   * centroid table.
@@ -47,6 +57,17 @@ object Similarity extends QueryPack {
     Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding"), VectorOps.norm("embedding").as("nrm"))
 
+  /** The first [[NQueries]] rows of a corpus frame as the query set:
+    * (query_id, qe, qn). */
+  private def queryVecs(c: DataFrame): DataFrame =
+    c.filter(col("vec_id") < NQueries)
+      .select(col("vec_id").as("query_id"), col("embedding").as("qe"), col("nrm").as("qn"))
+
+  /** Exact cosine of the query (qe, qn) against the vector column `v`
+    * of norm `n`: a corpus row (embedding, nrm) or a centroid (ce, cn). */
+  private def cosine(v: String, n: String): Column =
+    VectorOps.dot("qe", v) / (col("qn") * col(n))
+
   private def rankedTopK(pairs: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cosine").desc, col("neighbor_id"))
@@ -55,17 +76,31 @@ object Similarity extends QueryPack {
       .select(col("query_id"), col("neighbor_id"), col("rank"), col("cosine"))
   }
 
+  /** Every (query, other corpus row) pair of `c` scored by `cos`, as
+    * (query_id, neighbor_id, cosine): the full scan the exact keys run,
+    * queries broadcast, one pass over the corpus. */
+  private def scanPairs(c: DataFrame, cos: Column): DataFrame =
+    c.join(broadcast(queryVecs(c)), col("vec_id") =!= col("query_id"))
+      .withColumn("cosine", cos)
+      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("cosine"))
+
+  /** Exact top-k of a (query_id, vec_id) candidate set — the stage every
+    * shortlisting tier ends with: each candidate's full vector is read
+    * back from the corpus and scored by its exact [[cosine]] against the
+    * query. Candidates and queries ride broadcast; the corpus is the one
+    * scanned side. */
+  private[graft] def exactRerank(spark: SparkSession, dir: String,
+      candidates: DataFrame): DataFrame =
+    rankedTopK(corpus(spark, dir)
+      .join(broadcast(candidates), Seq("vec_id"))
+      .join(broadcast(queryVecs(corpus(spark, dir))), Seq("query_id"))
+      .select(col("query_id"), col("vec_id").as("neighbor_id"),
+        cosine("embedding", "nrm").as("cosine")))
+
   /** Exact top-5 cosine neighbors for the first 10 vectors: broadcast the
     * queries, single scan of the corpus, per-query top-k window. */
-  def topKBruteForce(spark: SparkSession, dir: String): DataFrame = {
-    val c = corpus(spark, dir)
-    val q = c.filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"), col("nrm").as("qn"))
-    val pairs = c.join(broadcast(q), col("vec_id") =!= col("query_id"))
-      .withColumn("cosine", VectorOps.dot("qe", "embedding") / (col("qn") * col("nrm")))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("cosine"))
-    rankedTopK(pairs)
-  }
+  def topKBruteForce(spark: SparkSession, dir: String): DataFrame =
+    rankedTopK(scanPairs(corpus(spark, dir), cosine("embedding", "nrm")))
 
   private val RangeTau = 0.2
 
@@ -82,18 +117,10 @@ object Similarity extends QueryPack {
     * in front as a prefilter; the threshold form keeps exact semantics
     * here because cosine ≥ τ survives the oracle hash gate bit-exactly
     * while a recall-bounded prefilter could not. */
-  def rangeSearch(spark: SparkSession, dir: String): DataFrame = {
-    val c = corpus(spark, dir)
-    val q = c.filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-        col("nrm").as("qn"))
-    c.join(broadcast(q), col("vec_id") =!= col("query_id"))
-      .withColumn("cosine",
-        VectorOps.dot("qe", "embedding") / (col("qn") * col("nrm")))
+  def rangeSearch(spark: SparkSession, dir: String): DataFrame =
+    scanPairs(corpus(spark, dir), cosine("embedding", "nrm"))
       .filter(col("cosine") >= RangeTau)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("cosine"))
       .orderBy(col("query_id"), col("cosine").desc, col("neighbor_id"))
-  }
 
   /** Deterministic pseudo-random hyperplanes in [-1, 1] from a fixed LCG
     * (Numerical Recipes constants) — reproducible across runs/JVMs. */
@@ -167,19 +194,8 @@ object Similarity extends QueryPack {
       if (isClusteredAt(spark, dir)) BitsClustered else BitsPerTable)
 
   private[graft] def topKLshParams(spark: SparkSession, dir: String,
-      nTables: Int, bits: Int): DataFrame = {
-    // candidates re-attach the 10 query vectors via a broadcast join
-    val candIds = lshCandidateIds(spark, dir, nTables, bits)
-    val qVecs = corpus(spark, dir).filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"), col("nrm").as("qn"))
-    val pairs = corpus(spark, dir)
-      .select(col("vec_id"), col("embedding").as("ne"), col("nrm").as("nn"))
-      .join(broadcast(candIds), Seq("vec_id"))
-      .join(broadcast(qVecs), Seq("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        (VectorOps.dot("qe", "ne") / (col("qn") * col("nn"))).as("cosine"))
-    rankedTopK(pairs)
-  }
+      nTables: Int, bits: Int): DataFrame =
+    exactRerank(spark, dir, lshCandidateIds(spark, dir, nTables, bits))
 
   private val SeedStride = 20
   private val LloydIters = 2
@@ -278,9 +294,14 @@ object Similarity extends QueryPack {
   /** [[regimeSignal]] off a fixture dir, cached per corpus. */
   private[graft] def regimeSignalAt(spark: SparkSession, dir: String): Double =
     statCached(spark, dir, "regime") {
-      val c = corpus(spark, dir)
-      regimeSignal(spark, c, c.count())
+      regimeSignal(spark, corpus(spark, dir), corpusRows(spark, dir))
     }
+
+  /** Row count of the raw [[corpus]], cached per corpus like the
+    * statistics sized by it, so an IVF query runs no count job of its
+    * own ([[pqCorpusRows]] is the PQ corpus's). */
+  private def corpusRows(spark: SparkSession, dir: String): Long =
+    statCached(spark, dir, "rows") { corpus(spark, dir).count() }
 
   private[graft] def isClusteredAt(spark: SparkSession, dir: String): Boolean =
     regimeSignalAt(spark, dir) >= ClusteredSignal
@@ -309,18 +330,6 @@ object Similarity extends QueryPack {
     if (!clustered) pqShortlist(n)
     else math.max(150, math.ceil(n * PqShortFracClustered).toInt)
 
-  /** Nearest-`keep` centroids per row against a broadcast centroid
-    * table; ties break on cent_id (deterministic). */
-  private def nearest(df: DataFrame, cents: DataFrame, keep: Int,
-      idCol: String, eCol: String, nCol: String): DataFrame = {
-    val w = Window.partitionBy(col(idCol))
-      .orderBy(col("cdist").desc, col("cent_id")) // cosine desc = nearest
-    df.join(broadcast(cents))
-      .withColumn("cdist", VectorOps.dot(eCol, "ce") / (col(nCol) * col("cn")))
-      .withColumn("crank", row_number().over(w))
-      .filter(col("crank") <= keep)
-  }
-
   /** Literal centroid table as a column — array<struct<_1: cid,
     * _2: vec, _3: norm>> packed into ONE `Literal` node via typedlit
     * (a CreateArray tree of 25×64 scalar literals re-compiles codegen on
@@ -334,26 +343,6 @@ object Similarity extends QueryPack {
         math.sqrt(vec.foldLeft(0.0)((a, x) => a + x.toDouble * x.toDouble)))
     })
 
-  /** Nearest-centroid (best cosine, cent_id) for each row as a PURE
-    * MAP-SIDE pass — no join, no window, no shuffle — via the codegen
-    * [[graft.functions.CellArgmax]] expression (centroids ride as
-    * reference objects, O(1) generated code in k·dim). Ties break to
-    * the lowest cent_id (strict `>` keeps the earlier entry), matching
-    * the (cosine desc, cent_id) window order used for probes.
-    *
-    * Zero-norm or NaN embeddings are deliberately EXCLUDED: their cosine
-    * is NULL/NaN, never `>` the accumulator, so cent_id stays -1 and the
-    * vector joins no probe list — an undefined-direction vector has no
-    * meaningful cosine neighbors. (The fixture corpus contains none; a
-    * production ingest should drop or impute them upstream, mirroring
-    * the nullif guard in quantizeInt8.)
-    *
-    * History: through r16 this was an interpreted `aggregate(...)` fold
-    * over a `typedlit` centroid array — k lambda dispatches per row,
-    * measured (SCALE.md, the capped 2M-vector decade) as the dominant
-    * cost of every IVF-family key at scale. The fold is retained below
-    * as [[argmaxFoldRef]], solely as CellArgmaxSpec's bit-equality
-    * oracle. */
   /** The INTERPRETED reference fold, over ANY array<struct<_1 id,
     * _2 vec, _3 norm>> column — retained as the spec oracle for the
     * codegen expression (identical IEEE order by construction:
@@ -390,6 +379,26 @@ object Similarity extends QueryPack {
     argmaxFold(element_at(nested, sid + 1), eCol, nCol)
   }
 
+  /** Nearest-centroid (best cosine, cent_id) for each row as a PURE
+    * MAP-SIDE pass — no join, no window, no shuffle — via the codegen
+    * [[graft.functions.CellArgmax]] expression (centroids ride as
+    * reference objects, O(1) generated code in k·dim). Ties break to
+    * the lowest cent_id (strict `>` keeps the earlier entry), matching
+    * the (cosine desc, cent_id) window order used for probes.
+    *
+    * Zero-norm or NaN embeddings are deliberately EXCLUDED: their cosine
+    * is NULL/NaN, never `>` the accumulator, so cent_id stays -1 and the
+    * vector joins no probe list — an undefined-direction vector has no
+    * meaningful cosine neighbors. (The fixture corpus contains none; a
+    * production ingest should drop or impute them upstream, mirroring
+    * the nullif guard in quantizeInt8.)
+    *
+    * History: through r16 this was an interpreted `aggregate(...)` fold
+    * over a `typedlit` centroid array — k lambda dispatches per row,
+    * measured (SCALE.md, the capped 2M-vector decade) as the dominant
+    * cost of every IVF-family key at scale. The fold is retained below
+    * as [[argmaxFoldRef]], solely as CellArgmaxSpec's bit-equality
+    * oracle. */
   private def assignedCentBest(cents: Seq[(Int, Array[Float])],
       eCol: String, nCol: String): Column =
     graft.functions.CellArgmax.best(col(eCol), col(nCol), cents)
@@ -516,66 +525,63 @@ object Similarity extends QueryPack {
     * nearest-centroid assignment for the corpus, queries probe the
     * [[ivfProbes]] nearest centroids and rerank exactly. Corpus
     * assignment is the map-side argmax (no shuffle); the 10 probe
-    * queries still rank via the k-row window (trivial). No distinct on
-    * the candidate pairs: each vector has exactly one centroid, so a
-    * (query, vector) pair joins at most once. Rows-only +
+    * queries still rank via the k-row window (trivial). Rows-only +
     * DedupSimilaritySpec recall floor at the fixture, ScaledAnnSpec at
     * the ×10 corpus. */
   def topKIvf(spark: SparkSession, dir: String): DataFrame =
-    topKIvfIters(spark, dir, LloydIters)
+    topKIvfIters(spark, dir)
 
   /** `probes = 0` (the default) derives the probe count from the
     * derived cell count; an explicit value is the regime knob
-    * (ClusteredAnnSpec probes 3). */
+    * (ClusteredAnnSpec probes 3). The probed pairs carry both vectors,
+    * so the exact cosine is computed in the probe join itself. */
   private[graft] def topKIvfIters(spark: SparkSession, dir: String,
-      iters: Int, probes: Int = 0): DataFrame = {
-    import spark.implicits._
-    val c = corpus(spark, dir)
-    val n = c.count()
-    val cents = lloydCentroidsFor(spark, dir, c, iters, ivfStride(n), "raw")
-    val nProbes = if (probes > 0) probes
-      else ivfProbesRegime(cents.size, isClusteredAt(spark, dir))
-    val assigned = c.withColumn("cent_id",
-      assignedCentId(cents, "embedding", "nrm"))
-    val centsDf = cents.toDF("cent_id", "ce")
-      .select(col("cent_id"), col("ce"), VectorOps.norm("ce").as("cn"))
-    val q = nearest(
-      c.filter(col("vec_id") < NQueries)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qe"), col("nrm").as("qn")),
-      centsDf, nProbes, "query_id", "qe", "qn")
-      .select(col("query_id"), col("qe"), col("qn"), col("cent_id"))
-    val pairs = assigned.join(broadcast(q), Seq("cent_id"))
-      .filter(col("vec_id") =!= col("query_id"))
+      probes: Int = 0): DataFrame =
+    rankedTopK(ivfPairs(spark, dir, probes)
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        (VectorOps.dot("qe", "embedding") / (col("qn") * col("nrm"))).as("cosine"))
-    rankedTopK(pairs)
-  }
+        cosine("embedding", "nrm").as("cosine")))
 
   /** Candidate (query_id, vec_id) pairs the IVF probe list admits — the
     * exact-rerank workload. Only the ids are computed (no cosine, no
     * rerank); ClusteredAnnSpec measures the pair count / corpus ratio
     * per embedding regime. */
   private[graft] def ivfCandidateIds(spark: SparkSession, dir: String,
-      iters: Int, probes: Int = 0): DataFrame = {
-    import spark.implicits._
+      probes: Int = 0): DataFrame =
+    ivfPairs(spark, dir, probes).select(col("query_id"), col("vec_id"))
+
+  /** The IVF probe-pair stage: every (query, other corpus row) pair whose
+    * row sits in one of the query's probed cells, with the row's
+    * (embedding, nrm) and the query's (qe, qn). No distinct: each vector
+    * has exactly one centroid, so a pair joins at most once. */
+  private def ivfPairs(spark: SparkSession, dir: String,
+      probes: Int): DataFrame = {
     val c = corpus(spark, dir)
-    val n = c.count()
-    val cents = lloydCentroidsFor(spark, dir, c, iters, ivfStride(n), "raw")
+    val cents = lloydCentroidsFor(spark, dir, c, LloydIters,
+      ivfStride(corpusRows(spark, dir)), "raw")
     val nProbes = if (probes > 0) probes
       else ivfProbesRegime(cents.size, isClusteredAt(spark, dir))
-    val assigned = c.select(col("vec_id"),
-      assignedCentId(cents, "embedding", "nrm").as("cent_id"))
+    c.withColumn("cent_id", assignedCentId(cents, "embedding", "nrm"))
+      .join(broadcast(ivfProbes(c, cents, nProbes)), Seq("cent_id"))
+      .filter(col("vec_id") =!= col("query_id"))
+  }
+
+  /** Each query of `c` joined to its `nProbes` nearest centroids against
+    * a broadcast centroid table, ties to the lowest cent_id:
+    * (query_id, qe, qn, cent_id, qc), qc the exact query–centroid
+    * cosine (the coarse half of the residual tiers' score). */
+  private def ivfProbes(c: DataFrame, cents: Seq[(Int, Array[Float])],
+      nProbes: Int): DataFrame = {
+    import c.sparkSession.implicits._
     val centsDf = cents.toDF("cent_id", "ce")
       .select(col("cent_id"), col("ce"), VectorOps.norm("ce").as("cn"))
-    val q = nearest(
-      c.filter(col("vec_id") < NQueries)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-          col("nrm").as("qn")),
-      centsDf, nProbes, "query_id", "qe", "qn")
-      .select(col("query_id"), col("cent_id"))
-    assigned.join(broadcast(q), Seq("cent_id"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"))
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(col("cdist").desc, col("cent_id")) // cosine desc = nearest
+    queryVecs(c).join(broadcast(centsDf))
+      .withColumn("cdist", cosine("ce", "cn"))
+      .withColumn("crank", row_number().over(w))
+      .filter(col("crank") <= nProbes)
+      .select(col("query_id"), col("qe"), col("qn"), col("cent_id"),
+        col("cdist").as("qc"))
   }
 
   /** Brute-force top-k on the codegen'd [[graft.functions.DotProductFloat]]
@@ -586,12 +592,8 @@ object Similarity extends QueryPack {
     val c = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding"),
         sqrt(expr("graft_dot(embedding, embedding)")).as("nrm"))
-    val q = c.filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"), col("nrm").as("qn"))
-    val pairs = c.join(broadcast(q), col("vec_id") =!= col("query_id"))
-      .withColumn("cosine", expr("graft_dot(qe, embedding)") / (col("qn") * col("nrm")))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("cosine"))
-    rankedTopK(pairs)
+    rankedTopK(scanPairs(c,
+      expr("graft_dot(qe, embedding)") / (col("qn") * col("nrm"))))
   }
 
   // ---- Product quantization (PQ) --------------------------------------
@@ -618,11 +620,12 @@ object Similarity extends QueryPack {
   private[graft] def pqShortlist(n: Long): Int =
     math.max(1, math.ceil(n * PqShortFrac).toInt)
 
-  /** The 8×16 codebooks as ONE literal node: array (per subspace) of
-    * array (per centroid) of (cid, subvector) — same typedlit rationale
-    * as [[centArray]]. */
-  private def pqBooksLit(books: Seq[Seq[(Int, Array[Double])]]): Column =
-    typedlit(books.map(_.map { case (cid, v) => (cid, v.toSeq) }))
+  /** The ADC score of a (codes, qtab) row: the query's inner-product
+    * table summed over the row's 8 codes — native codegen
+    * (graft_pq_adc), the same ascending-s accumulation as the HOF fold
+    * it replaced, bit-identical scores (CatalystAggSpec). */
+  private def adc: Column =
+    graft.functions.PqAdc.adc(col("codes"), col("qtab"), PqK)
 
   /** Corpus with unit-normalized double vectors (`ne`): PQ codebooks are
     * trained on directions so that summed sub-space inner products
@@ -637,34 +640,35 @@ object Similarity extends QueryPack {
   private def pqCorpusRows(spark: SparkSession, dir: String): Long =
     statCached(spark, dir, "pq_rows") { pqCorpus(spark, dir).count() }
 
-  /** Per-subspace k-means codebooks, trained exactly like
-    * [[lloydCentroids]] (deterministic every-20th-vector seeds, long
-    * fixed-point sums, empty clusters keep their previous centroid) but
-    * over all 8 subspaces in ONE pass per round: each row's 8
-    * assignments come from one [[graft.functions.PqEncode]] codegen
-    * call (the interpreted HOF argmin this replaces was ~half the whole
-    * query), the (s, cid, subvec) explode is ×8 rows of 8 doubles each,
-    * and the (s, cid) aggregate collapses them map-side to 128 skinny
-    * rows. Codebooks live on the driver between rounds — 8×16×8 doubles
-    * of bookkeeping, not data. */
-  private[graft] def pqCodebooks(spark: SparkSession, c: DataFrame,
+  /** Per-subspace k-means codebooks over the double vector column `v`
+    * of `df`, trained exactly like [[lloydCentroids]] (deterministic
+    * every-20th-vector seeds, long fixed-point sums, empty clusters keep
+    * their previous centroid) but over all 8 subspaces in ONE pass per
+    * round: each row's 8 assignments come from one codegen `encode`
+    * call over the current books (the interpreted HOF argmin this
+    * replaces was ~half the whole query), the (s, cid, subvec) explode
+    * is ×8 rows of 8 doubles each, and the (s, cid) aggregate collapses
+    * them map-side to 128 skinny rows. Codebooks live on the driver
+    * between rounds — 8×16×8 doubles of bookkeeping, not data. */
+  private[graft] def pqCodebooks(spark: SparkSession, df: DataFrame,
+      v: String, encode: Seq[Seq[(Int, Array[Double])]] => Column,
       iters: Int): Seq[Seq[(Int, Array[Double])]] = {
     import spark.implicits._
     var books: Seq[Seq[(Int, Array[Double])]] = {
-      val seeds = c.filter(col("vec_id") % PqSeedStride === 0 &&
+      val seeds = df.filter(col("vec_id") % PqSeedStride === 0 &&
           col("vec_id") < PqSeedStride.toLong * PqK)
-        .select((col("vec_id") / PqSeedStride).cast("int").as("cid"), col("ne"))
+        .select((col("vec_id") / PqSeedStride).cast("int").as("cid"), col(v))
         .as[(Int, Array[Double])].collect().sortBy(_._1).toSeq
-      (0 until PqM).map(s => seeds.map { case (cid, v) =>
-        (cid, v.slice(s * PqSubDim, (s + 1) * PqSubDim)) })
+      (0 until PqM).map(s => seeds.map { case (cid, sv) =>
+        (cid, sv.slice(s * PqSubDim, (s + 1) * PqSubDim)) })
     }
     for (_ <- 1 to iters) {
-      val sub = c
-        .withColumn("codes", graft.functions.PqEncode.codes(col("embedding"), books))
+      val sub = df
+        .withColumn("codes", encode(books))
         .select(posexplode(expr(
           s"""transform(sequence(0, ${PqM - 1}), s -> struct(
              |  element_at(codes, s + 1) as cid,
-             |  slice(ne, s * $PqSubDim + 1, $PqSubDim) as sv))""".stripMargin)))
+             |  slice($v, s * $PqSubDim + 1, $PqSubDim) as sv))""".stripMargin)))
         .select(col("pos").as("s"), col("col.cid").as("cid"), col("col.sv").as("subvec"))
       val sums = (0 until PqSubDim).map(i =>
         sum(expr(s"cast(round(subvec[$i] * 1e6) as bigint)")).as(s"s$i"))
@@ -680,31 +684,68 @@ object Similarity extends QueryPack {
     books
   }
 
-  /** Cached [[pqCodebooks]] per corpus ([[statCached]]): the direction
-    * codebooks are a corpus statistic shared by the pq / ivfpq /
-    * serving-index paths, each of which re-derived the identical
-    * deterministic training per key. */
+  /** Cached direction codebooks per corpus ([[statCached]]): trained on
+    * the unit vectors `ne`, encoded by [[graft.functions.PqEncode]] —
+    * a corpus statistic shared by the pq / ivfpq / serving-index paths,
+    * each of which re-derived the identical deterministic training per
+    * key. */
   private def pqCodebooksFor(spark: SparkSession, dir: String,
       c: DataFrame): Seq[Seq[(Int, Array[Double])]] =
-    statCached(spark, dir, s"pqbooks:$PqIters") { pqCodebooks(spark, c, PqIters) }
+    statCached(spark, dir, s"pqbooks:$PqIters") {
+      pqCodebooks(spark, c, "ne",
+        graft.functions.PqEncode.codes(col("embedding"), _), PqIters)
+    }
 
-  /** Per-query 128-entry ADC table (subspace × centroid inner products
-    * against the query's unit vector `ne`), flattened to one
-    * `array<double>` so scoring is pure array lookups. */
-  private def pqQueryTab(lit3: Column): Column = pqQueryTabOver(lit3, col("ne"))
+  /** Residual PQ codebooks — [[pqCodebooks]] over per-cell RESIDUALS
+    * (`r = x_unit − cell_centroid_unit`, array<double>, encoded by the
+    * no-normalization [[graft.functions.PqEncodeRaw]]). One pooled
+    * codebook across cells (the classic IVFADC layout), trained where
+    * the data actually lives — near the origin of each cell's frame. */
+  private[graft] def pqResidualCodebooks(spark: SparkSession, rdf: DataFrame,
+      iters: Int): Seq[Seq[(Int, Array[Double])]] =
+    pqCodebooks(spark, rdf, "r",
+      graft.functions.PqEncode.codesRaw(col("r"), _), iters)
 
-  /** [[pqQueryTab]] with the query vector as a column — the OPQ tier
-    * scores against the ROTATED query (q·r = (Rq)·(Rr) for orthogonal
-    * R), so its table slices Rq where the plain tiers slice `ne`. */
-  private def pqQueryTabOver(lit3: Column, qv: Column): Column =
-    transform(sequence(lit(0), lit(PqM * PqK - 1)), i => {
-      val s = floor(i / lit(PqK)).cast("int")
-      val cent = element_at(element_at(lit3, s + 1),
-        pmod(i, lit(PqK)).cast("int") + 1).getField("_2")
-      aggregate(zip_with(cent,
-        slice(qv, s * lit(PqSubDim) + lit(1), lit(PqSubDim)),
-        (a, b) => a * b), lit(0.0), (x, y) => x + y)
-    })
+  /** The per-query ADC table (query_id, qtab) of the queries of `c`: the
+    * 128 inner products (subspace × centroid) of `books` against slices
+    * of the query vector `qv`, flattened to one `array<double>` so
+    * scoring is pure array lookups. The books ride as ONE literal node
+    * (array per subspace of (cid, subvector) per centroid — the
+    * [[centArray]] rationale). The plain tiers slice the unit query
+    * `ne`; OPQ slices the ROTATED query (q·r = (Rq)·(Rr) for orthogonal
+    * R). */
+  private def adcTable(c: DataFrame, books: Seq[Seq[(Int, Array[Double])]],
+      qv: Column): DataFrame = {
+    val lit3 = typedlit(books.map(_.map { case (cid, v) => (cid, v.toSeq) }))
+    c.filter(col("vec_id") < NQueries).select(col("vec_id").as("query_id"),
+      transform(sequence(lit(0), lit(PqM * PqK - 1)), i => {
+        val s = floor(i / lit(PqK)).cast("int")
+        val cent = element_at(element_at(lit3, s + 1),
+          pmod(i, lit(PqK)).cast("int") + 1).getField("_2")
+        aggregate(zip_with(cent,
+          slice(qv, s * lit(PqSubDim) + lit(1), lit(PqSubDim)),
+          (a, b) => a * b), lit(0.0), (x, y) => x + y)
+      }).as("qtab"))
+  }
+
+  /** The per-query ADC shortlist, (query_id, vec_id): the codes
+    * (vec_id, codes, …) meet the broadcast query table `q` (query_id,
+    * qtab, …) on the columns the two share — cent_id for the IVF tiers,
+    * none (every code) for flat PQ — and each query keeps its
+    * `shortlist` best non-self rows by the named column `score`, ties
+    * to the lower vec_id. Only codes and ids move; [[exactRerank]]
+    * repairs the ADC rank errors inside the shortlist. */
+  private def adcShortlist(codes: DataFrame, q: DataFrame, score: Column,
+      shortlist: Int): DataFrame = {
+    val scored = codes.join(broadcast(q), codes.columns.intersect(q.columns).toSeq)
+      .filter(col("vec_id") =!= col("query_id"))
+      .select(col("*"), score)
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(col(scored.columns.last).desc, col("vec_id"))
+    scored.withColumn("arank", row_number().over(w))
+      .filter(col("arank") <= shortlist)
+      .select(col("query_id"), col("vec_id"))
+  }
 
   /** Product-quantization ANN — the 100 TB shape: after training, every
     * corpus vector is represented by an 8-int code (conceptually 8
@@ -721,33 +762,55 @@ object Similarity extends QueryPack {
     * run-to-run determinism; ScaledAnnSpec re-pins at ×10. */
   def topKPq(spark: SparkSession, dir: String): DataFrame = {
     val c = pqCorpus(spark, dir)
-    val n = pqCorpusRows(spark, dir)
-    val shortlist = pqShortlistRegime(n, isClusteredAt(spark, dir))
+    val shortlist =
+      pqShortlistRegime(pqCorpusRows(spark, dir), isClusteredAt(spark, dir))
     val books = pqCodebooksFor(spark, dir, c)
-    val lit3 = pqBooksLit(books)
     val codes = c.select(col("vec_id"),
       graft.functions.PqEncode.codes(col("embedding"), books).as("codes"))
-    val q = c.filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("query_id"), pqQueryTab(lit3).as("qtab"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc").desc, col("vec_id"))
-    val short = codes.join(broadcast(q), col("vec_id") =!= col("query_id"))
-      // native codegen ADC (graft_pq_adc) — the HOF fold this replaces
-      // ran interpreted per (query x vector) pair; same ascending-s
-      // accumulation, bit-identical scores (CatalystAggSpec)
-      .withColumn("adc",
-        graft.functions.PqAdc.adc(col("codes"), col("qtab"), PqK))
-      .withColumn("arank", row_number().over(w))
-      .filter(col("arank") <= shortlist)
-      .select(col("query_id"), col("vec_id"))
-    val qVecs = corpus(spark, dir).filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"), col("nrm").as("qn"))
-    val pairs = corpus(spark, dir)
-      .join(broadcast(short), Seq("vec_id"))
-      .join(broadcast(qVecs), Seq("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        (VectorOps.dot("qe", "embedding") / (col("qn") * col("nrm"))).as("cosine"))
-    rankedTopK(pairs)
+    exactRerank(spark, dir,
+      adcShortlist(codes, adcTable(c, books, col("ne")), adc.as("adc"), shortlist))
+  }
+
+  /** The IVF-ADC search every IVF-PQ tier runs over the [[pqCorpus]] `c`
+    * of `n` rows: cached Lloyd centroids, the (probes, shortlist) budget
+    * — an explicit positive value wins, 0 derives it from the corpus and
+    * its regime — each query's probed cells joined to its ADC table, the
+    * [[adcShortlist]] by `score` over the probed codes, and the
+    * [[exactRerank]]. `index(c, n, cents)` is the tier: it returns its
+    * codes (vec_id, cent_id, codes) and its ADC table (query_id, qtab). */
+  private def ivfAdcTopK(spark: SparkSession, dir: String, nProbes0: Int,
+      shortlist0: Int, score: Column)(index: (DataFrame, Long,
+        Seq[(Int, Array[Float])]) => (DataFrame, DataFrame)): DataFrame = {
+    val c = pqCorpus(spark, dir)
+    val n = pqCorpusRows(spark, dir)
+    val cents = lloydCentroidsFor(spark, dir, c, LloydIters, ivfStride(n), "pq")
+    val clustered = (nProbes0 <= 0 || shortlist0 <= 0) &&
+      isClusteredAt(spark, dir)
+    val nProbes = if (nProbes0 > 0) nProbes0
+      else ivfProbesRegime(cents.size, clustered)
+    val shortlist = if (shortlist0 > 0) shortlist0
+      else pqShortlistRegime(n, clustered)
+    val (codes, qtab) = index(c, n, cents)
+    // 10 queries × the probed cells, each row carrying the 128-double
+    // table — broadcast-sized by construction
+    val q = ivfProbes(c, cents, nProbes).join(qtab, Seq("query_id"))
+    exactRerank(spark, dir, adcShortlist(codes, q, score, shortlist))
+  }
+
+  /** The corpus `c` in its cells' frames: cent_id (the nearest
+    * centroid), cu (that centroid as a unit double vector, the frame of
+    * both the residual and the exact q·ĉ term) and the residual
+    * r = ne − cu the residual tiers code. */
+  private def residuals(c: DataFrame,
+      cents: Seq[(Int, Array[Float])]): DataFrame = {
+    import c.sparkSession.implicits._
+    val cu = cents.map { case (cid, ce) =>
+      val nr = math.sqrt(ce.foldLeft(0.0)((a, x) => a + x.toDouble * x.toDouble))
+      (cid, ce.map(x => if (nr > 0) x.toDouble / nr else 0.0))
+    }.toDF("cent_id", "cu")
+    c.withColumn("cent_id", assignedCentId(cents, "embedding", "nrm"))
+      .join(broadcast(cu), Seq("cent_id"))
+      .withColumn("r", zip_with(col("ne"), col("cu"), (a, b) => a - b))
   }
 
   // IVF-PQ prunes twice: the cell list is the only UNRECOVERABLE cut
@@ -789,94 +852,14 @@ object Similarity extends QueryPack {
     * (ClusteredAnnSpec) runs the same composition at a fraction of the
     * default scan budget. */
   private[graft] def topKIvfPqParams(spark: SparkSession, dir: String,
-      nProbes0: Int, shortlist0: Int): DataFrame = {
-    import spark.implicits._
-    val c = pqCorpus(spark, dir)
-    val n = pqCorpusRows(spark, dir)
-    val cents = lloydCentroidsFor(spark, dir, c, LloydIters, ivfStride(n), "pq")
-    val clustered = (nProbes0 <= 0 || shortlist0 <= 0) &&
-      isClusteredAt(spark, dir)
-    val nProbes = if (nProbes0 > 0) nProbes0
-      else ivfProbesRegime(cents.size, clustered)
-    val shortlist = if (shortlist0 > 0) shortlist0
-      else pqShortlistRegime(n, clustered)
-    val books = pqCodebooksFor(spark, dir, c)
-    val lit3 = pqBooksLit(books)
-    val codes = c.select(col("vec_id"),
-      assignedCentId(cents, "embedding", "nrm").as("cent_id"),
-      graft.functions.PqEncode.codes(col("embedding"), books).as("codes"))
-    val centsDf = cents.toDF("cent_id", "ce")
-      .select(col("cent_id"), col("ce"), VectorOps.norm("ce").as("cn"))
-    val qbase = c.filter(col("vec_id") < NQueries)
-    val qtab = qbase.select(col("vec_id").as("query_id"),
-      pqQueryTab(lit3).as("qtab"))
-    val probes = nearest(
-      qbase.select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-        col("nrm").as("qn")),
-      centsDf, nProbes, "query_id", "qe", "qn")
-      .select(col("query_id"), col("cent_id"))
-    // 10 queries × 17 probed cells, each row carrying the 128-double
-    // table — broadcast-sized by construction
-    val q = probes.join(qtab, Seq("query_id"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc").desc, col("vec_id"))
-    val short = codes.join(broadcast(q), Seq("cent_id"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("adc",
-        graft.functions.PqAdc.adc(col("codes"), col("qtab"), PqK))
-      .withColumn("arank", row_number().over(w))
-      .filter(col("arank") <= shortlist)
-      .select(col("query_id"), col("vec_id"))
-    val qVecs = corpus(spark, dir).filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-        col("nrm").as("qn"))
-    val pairs = corpus(spark, dir)
-      .join(broadcast(short), Seq("vec_id"))
-      .join(broadcast(qVecs), Seq("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        (VectorOps.dot("qe", "embedding") / (col("qn") * col("nrm"))).as("cosine"))
-    rankedTopK(pairs)
-  }
-
-  /** Residual PQ codebooks — [[pqCodebooks]] over per-cell RESIDUALS
-    * (`r = x_unit − cell_centroid_unit`, array<double>, encoded by the
-    * no-normalization [[graft.functions.PqEncodeRaw]]): same
-    * deterministic stride seeds, long fixed-point sums, empty clusters
-    * keep their previous centroid. One pooled codebook across cells
-    * (the classic IVFADC layout), trained where the data actually
-    * lives — near the origin of each cell's frame. */
-  private[graft] def pqResidualCodebooks(spark: SparkSession, rdf: DataFrame,
-      iters: Int): Seq[Seq[(Int, Array[Double])]] = {
-    import spark.implicits._
-    var books: Seq[Seq[(Int, Array[Double])]] = {
-      val seeds = rdf.filter(col("vec_id") % PqSeedStride === 0 &&
-          col("vec_id") < PqSeedStride.toLong * PqK)
-        .select((col("vec_id") / PqSeedStride).cast("int").as("cid"), col("r"))
-        .as[(Int, Array[Double])].collect().sortBy(_._1).toSeq
-      (0 until PqM).map(s => seeds.map { case (cid, v) =>
-        (cid, v.slice(s * PqSubDim, (s + 1) * PqSubDim)) })
+      nProbes0: Int, shortlist0: Int): DataFrame =
+    ivfAdcTopK(spark, dir, nProbes0, shortlist0, adc.as("adc")) { (c, _, cents) =>
+      val books = pqCodebooksFor(spark, dir, c)
+      (c.select(col("vec_id"),
+        assignedCentId(cents, "embedding", "nrm").as("cent_id"),
+        graft.functions.PqEncode.codes(col("embedding"), books).as("codes")),
+        adcTable(c, books, col("ne")))
     }
-    for (_ <- 1 to iters) {
-      val sub = rdf
-        .withColumn("codes", graft.functions.PqEncode.codesRaw(col("r"), books))
-        .select(posexplode(expr(
-          s"""transform(sequence(0, ${PqM - 1}), s -> struct(
-             |  element_at(codes, s + 1) as cid,
-             |  slice(r, s * $PqSubDim + 1, $PqSubDim) as sv))""".stripMargin)))
-        .select(col("pos").as("s"), col("col.cid").as("cid"), col("col.sv").as("subvec"))
-      val sums = (0 until PqSubDim).map(i =>
-        sum(expr(s"cast(round(subvec[$i] * 1e6) as bigint)")).as(s"s$i"))
-      val next = sub.groupBy(col("s"), col("cid"))
-        .agg(count(lit(1)).as("cnt"), sums: _*)
-        .select(col("s"), col("cid"),
-          array((0 until PqSubDim).map(i => col(s"s$i") / 1e6 / col("cnt")): _*).as("ce"))
-        .as[(Int, Int, Array[Double])].collect()
-        .map { case (s, cid, ce) => (s, cid) -> ce }.toMap
-      books = books.zipWithIndex.map { case (book, s) =>
-        book.map { case (cid, prev) => (cid, next.getOrElse((s, cid), prev)) } }
-    }
-    books
-  }
 
   /** RESIDUAL-coded IVF-PQ — the IVFADC of Jégou et al. ("Product
     * Quantization for Nearest Neighbor Search", TPAMI 2011), closing
@@ -904,69 +887,20 @@ object Similarity extends QueryPack {
     topKIvfPqResidualParams(spark, dir, 0, 0)
 
   private[graft] def topKIvfPqResidualParams(spark: SparkSession, dir: String,
-      nProbes0: Int, shortlist0: Int): DataFrame = {
-    import spark.implicits._
-    val c = pqCorpus(spark, dir)
-    val n = pqCorpusRows(spark, dir)
-    val cents = lloydCentroidsFor(spark, dir, c, LloydIters, ivfStride(n), "pq")
-    val clustered = (nProbes0 <= 0 || shortlist0 <= 0) &&
-      isClusteredAt(spark, dir)
-    val nProbes = if (nProbes0 > 0) nProbes0
-      else ivfProbesRegime(cents.size, clustered)
-    val shortlist = if (shortlist0 > 0) shortlist0
-      else pqShortlistRegime(n, clustered)
-    // unit centroids: the scoring frame of both the residual and the
-    // exact q·ĉ term
-    val centsU: Seq[(Int, Array[Double])] = cents.map { case (cid, ce) =>
-      val nr = math.sqrt(ce.foldLeft(0.0)((a, x) => a + x.toDouble * x.toDouble))
-      (cid, ce.map(x => if (nr > 0) x.toDouble / nr else 0.0))
+      nProbes0: Int, shortlist0: Int): DataFrame =
+    ivfAdcTopK(spark, dir, nProbes0, shortlist0,
+        (col("qc") + adc).as("score")) { (c, _, cents) =>
+      val rdf = residuals(c, cents)
+      // residual codebooks are a corpus statistic (deterministic stride
+      // seeds over a deterministic residual frame) — cached per corpus
+      // like the centroids they are trained against
+      val books = statCached(spark, dir, s"resbooks:$PqIters") {
+        pqResidualCodebooks(spark, rdf.select(col("vec_id"), col("r")), PqIters)
+      }
+      (rdf.select(col("vec_id"), col("cent_id"),
+        graft.functions.PqEncode.codesRaw(col("r"), books).as("codes")),
+        adcTable(c, books, col("ne")))
     }
-    val cuDf = centsU.toDF("cent_id", "cu")
-    val assigned = c
-      .withColumn("cent_id", assignedCentId(cents, "embedding", "nrm"))
-      .join(broadcast(cuDf), Seq("cent_id"))
-      .withColumn("r", zip_with(col("ne"), col("cu"), (a, b) => a - b))
-    // residual codebooks are a corpus statistic (deterministic stride
-    // seeds over a deterministic residual frame) — cached per corpus
-    // like the centroids they are trained against
-    val books = statCached(spark, dir, s"resbooks:$PqIters") {
-      pqResidualCodebooks(spark, assigned.select(col("vec_id"), col("r")), PqIters)
-    }
-    val lit3 = pqBooksLit(books)
-    val codes = assigned.select(col("vec_id"), col("cent_id"),
-      graft.functions.PqEncode.codesRaw(col("r"), books).as("codes"))
-    val centsDf = cents.toDF("cent_id", "ce")
-      .select(col("cent_id"), col("ce"), VectorOps.norm("ce").as("cn"))
-    val qbase = c.filter(col("vec_id") < NQueries)
-    val qtab = qbase.select(col("vec_id").as("query_id"),
-      pqQueryTab(lit3).as("qtab"))
-    // probes carry the EXACT q·ĉ cosine forward as qc — the coarse
-    // half of the decomposed score
-    val probes = nearest(
-      qbase.select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-        col("nrm").as("qn")),
-      centsDf, nProbes, "query_id", "qe", "qn")
-      .select(col("query_id"), col("cent_id"), col("cdist").as("qc"))
-    val q = probes.join(qtab, Seq("query_id"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("vec_id"))
-    val short = codes.join(broadcast(q), Seq("cent_id"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("score", col("qc") +
-        graft.functions.PqAdc.adc(col("codes"), col("qtab"), PqK))
-      .withColumn("arank", row_number().over(w))
-      .filter(col("arank") <= shortlist)
-      .select(col("query_id"), col("vec_id"))
-    val qVecs = corpus(spark, dir).filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-        col("nrm").as("qn"))
-    val pairs = corpus(spark, dir)
-      .join(broadcast(short), Seq("vec_id"))
-      .join(broadcast(qVecs), Seq("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        (VectorOps.dot("qe", "embedding") / (col("qn") * col("nrm"))).as("cosine"))
-    rankedTopK(pairs)
-  }
 
   /** Deterministic second-moment matrix of a (vec_id, r: array<double>)
     * residual frame, as driver doubles: Σ r·rᵀ with every elementwise
@@ -1075,6 +1009,12 @@ object Similarity extends QueryPack {
     }.toArray
   }
 
+  /** Rotation-training sample floor: the second moment has 64×64 = 4096
+    * free parameters; ~8k vectors estimate it to a few percent, and the
+    * eigenvalue ALLOCATION (what the rotation is for) is insensitive to
+    * that noise. */
+  private val OpqCovSampleTarget = 8192L
+
   /** OPQ-rotated residual IVF-PQ — [[topKIvfPqResidual]] with Ge et
     * al.'s optimized product quantization (CVPR 2013) between the
     * residual and the codebooks: residuals rotate by the learned
@@ -1095,106 +1035,49 @@ object Similarity extends QueryPack {
     * driver eigen-solve (bounded) and a codegen'd [[graft.functions
     * .MatVec]] multiply per row at encode time — floats still never
     * shuffle after encoding. */
-  /** Rotation-training sample floor: the second moment has 64×64 = 4096
-    * free parameters; ~8k vectors estimate it to a few percent, and the
-    * eigenvalue ALLOCATION (what the rotation is for) is insensitive to
-    * that noise. */
-  private val OpqCovSampleTarget = 8192L
-
   def topKOpq(spark: SparkSession, dir: String): DataFrame =
-    topKOpqParams(spark, dir, 0, 0)
-
-  private[graft] def topKOpqParams(spark: SparkSession, dir: String,
-      nProbes0: Int, shortlist0: Int): DataFrame = {
-    import spark.implicits._
-    val c = pqCorpus(spark, dir)
-    val n = pqCorpusRows(spark, dir)
-    val cents = lloydCentroidsFor(spark, dir, c, LloydIters, ivfStride(n), "pq")
-    val clustered = (nProbes0 <= 0 || shortlist0 <= 0) &&
-      isClusteredAt(spark, dir)
-    val nProbes = if (nProbes0 > 0) nProbes0
-      else ivfProbesRegime(cents.size, clustered)
-    val shortlist = if (shortlist0 > 0) shortlist0
-      else pqShortlistRegime(n, clustered)
-    val centsU: Seq[(Int, Array[Double])] = cents.map { case (cid, ce) =>
-      val nr = math.sqrt(ce.foldLeft(0.0)((a, x) => a + x.toDouble * x.toDouble))
-      (cid, ce.map(x => if (nr > 0) x.toDouble / nr else 0.0))
+    ivfAdcTopK(spark, dir, 0, 0, (col("qc") + adc).as("score")) { (c, n, cents) =>
+      val rdf = residuals(c, cents)
+      // TRAINING runs multiple full passes (the covariance collect + one
+      // collect per codebook round); each pass would otherwise recompute
+      // read → normalize → cell-argmax → residual from scratch. The
+      // training frame is therefore materialized ONCE (localCheckpoint)
+      // and released as soon as the driver holds R and the codebooks —
+      // every training action is eager, so release is safe, and the
+      // values are unchanged (fixed-point sums commute over any
+      // partitioning). Measured: 10.8 → ~5 s at sf0.1. At 100 TB the
+      // training frame is a bounded deterministic SAMPLE (vec_id stride,
+      // the FAISS convention) — rotation and codebooks are statistics,
+      // not per-row artifacts; only the single encode pass below touches
+      // the full corpus.
+      // R and the rotated-residual codebooks are corpus statistics like
+      // the centroids — cached per corpus ([[statCached]]); retraining
+      // them per invocation was the whole key's cost (measured 5.5 s/key
+      // in the r16 sweep, the slowest non-graph key)
+      val (rot, books) = statCached(spark, dir,
+          s"opq:$PqIters:$OpqCovSampleTarget") {
+        val resid = rdf.select(col("vec_id"), col("r")).localCheckpoint()
+        // The rotation is a 64×64 STATISTIC, not a per-row artifact: learn
+        // it from a bounded deterministic sample (every covStride-th
+        // vec_id, targeting ~8k vectors — far beyond what a 4096-entry
+        // second-moment estimate needs). The covariance pass replicates
+        // each 64-d array 64× through its aggregate (posexplode carrying
+        // the full array per element), so running it corpus-wide is ~2 GB
+        // of aggregate input at sf0.1 and corpus-linear at 100 TB for no
+        // statistical gain — measured 15.4 → ~6 s warm at sf0.1.
+        val covStride = math.max(1L, n / OpqCovSampleTarget)
+        val r = opqRotationOf(resid.filter(col("vec_id") % covStride === 0))
+        val b = pqResidualCodebooks(spark,
+          resid.select(col("vec_id"),
+            graft.functions.MatVec.mul(col("r"), r).as("r")), PqIters)
+        org.apache.spark.sql.GraftBridge.releaseLocalCheckpoint(resid)
+        (r, b)
+      }
+      (rdf.select(col("vec_id"), col("cent_id"),
+        graft.functions.PqEncode.codesRaw(
+          graft.functions.MatVec.mul(col("r"), rot), books).as("codes")),
+        adcTable(c, books, graft.functions.MatVec.mul(col("ne"), rot)))
     }
-    val cuDf = centsU.toDF("cent_id", "cu")
-    val assigned = c
-      .withColumn("cent_id", assignedCentId(cents, "embedding", "nrm"))
-      .join(broadcast(cuDf), Seq("cent_id"))
-      .withColumn("r", zip_with(col("ne"), col("cu"), (a, b) => a - b))
-    // TRAINING runs multiple full passes (the covariance collect + one
-    // collect per codebook round); each pass would otherwise recompute
-    // read → normalize → cell-argmax → residual from scratch. The
-    // training frame is therefore materialized ONCE (localCheckpoint)
-    // and released as soon as the driver holds R and the codebooks —
-    // every training action is eager, so release is safe, and the
-    // values are unchanged (fixed-point sums commute over any
-    // partitioning). Measured: 10.8 → ~5 s at sf0.1. At 100 TB the
-    // training frame is a bounded deterministic SAMPLE (vec_id stride,
-    // the FAISS convention) — rotation and codebooks are statistics,
-    // not per-row artifacts; only the single encode pass below touches
-    // the full corpus.
-    // R and the rotated-residual codebooks are corpus statistics like
-    // the centroids — cached per corpus ([[statCached]]); retraining
-    // them per invocation was the whole key's cost (measured 5.5 s/key
-    // in the r16 sweep, the slowest non-graph key)
-    val (rot, books) = statCached(spark, dir,
-        s"opq:$PqIters:$OpqCovSampleTarget") {
-      val resid = assigned.select(col("vec_id"), col("r")).localCheckpoint()
-      // The rotation is a 64×64 STATISTIC, not a per-row artifact: learn
-      // it from a bounded deterministic sample (every covStride-th
-      // vec_id, targeting ~8k vectors — far beyond what a 4096-entry
-      // second-moment estimate needs). The covariance pass replicates
-      // each 64-d array 64× through its aggregate (posexplode carrying
-      // the full array per element), so running it corpus-wide is ~2 GB
-      // of aggregate input at sf0.1 and corpus-linear at 100 TB for no
-      // statistical gain — measured 15.4 → ~6 s warm at sf0.1.
-      val covStride = math.max(1L, n / OpqCovSampleTarget)
-      val r = opqRotationOf(resid.filter(col("vec_id") % covStride === 0))
-      val b = pqResidualCodebooks(spark,
-        resid.select(col("vec_id"),
-          graft.functions.MatVec.mul(col("r"), r).as("r")), PqIters)
-      org.apache.spark.sql.GraftBridge.releaseLocalCheckpoint(resid)
-      (r, b)
-    }
-    val lit3 = pqBooksLit(books)
-    val codes = assigned.select(col("vec_id"), col("cent_id"),
-      graft.functions.PqEncode.codesRaw(
-        graft.functions.MatVec.mul(col("r"), rot), books).as("codes"))
-    val centsDf = cents.toDF("cent_id", "ce")
-      .select(col("cent_id"), col("ce"), VectorOps.norm("ce").as("cn"))
-    val qbase = c.filter(col("vec_id") < NQueries)
-    val qtab = qbase.select(col("vec_id").as("query_id"),
-      pqQueryTabOver(lit3, graft.functions.MatVec.mul(col("ne"), rot))
-        .as("qtab"))
-    val probes = nearest(
-      qbase.select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-        col("nrm").as("qn")),
-      centsDf, nProbes, "query_id", "qe", "qn")
-      .select(col("query_id"), col("cent_id"), col("cdist").as("qc"))
-    val q = probes.join(qtab, Seq("query_id"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("vec_id"))
-    val short = codes.join(broadcast(q), Seq("cent_id"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("score", col("qc") +
-        graft.functions.PqAdc.adc(col("codes"), col("qtab"), PqK))
-      .withColumn("arank", row_number().over(w))
-      .filter(col("arank") <= shortlist)
-      .select(col("query_id"), col("vec_id"))
-    val qVecs = corpus(spark, dir).filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-        col("nrm").as("qn"))
-    val pairs = corpus(spark, dir)
-      .join(broadcast(short), Seq("vec_id"))
-      .join(broadcast(qVecs), Seq("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        (VectorOps.dot("qe", "embedding") / (col("qn") * col("nrm"))).as("cosine"))
-    rankedTopK(pairs)
-  }
 
   /** Per-label embedding centroids at (label, dimension) grain — the
     * class-mean table nearest-class-mean audits and cluster-quality

@@ -61,7 +61,7 @@ class Ann200kSpec extends AnyFunSuite {
     assert(rc >= 0.9, s"ivf clustered x100 recall $rc")
     // the point of the adaptive curve: clustered candidates a fraction
     // of the uniform regime's derived 0.68
-    val frac = Similarity.ivfCandidateIds(spark, cluDir, 2).count() / MaxPairs
+    val frac = Similarity.ivfCandidateIds(spark, cluDir).count() / MaxPairs
     info(f"ivf clustered x100 scan_fraction=$frac%.4f")
     assert(frac <= 0.2, s"clustered ivf default scan fraction $frac")
   }

@@ -67,7 +67,7 @@ class ClusteredAnnSpec extends AnyFunSuite {
     // curve: recall floor holds at a fraction of the uniform regime's
     // derived 0.68 probe fraction
     val r = recall(pairs(Similarity.topKIvf(spark, dir)))
-    val frac = Similarity.ivfCandidateIds(spark, dir, 2).count() / MaxPairs
+    val frac = Similarity.ivfCandidateIds(spark, dir).count() / MaxPairs
     info(f"clustered IVF DEFAULT recall=$r%.3f scan_fraction=$frac%.4f")
     assert(r >= 0.9, s"clustered ivf default recall $r")
     assert(frac <= 0.2, s"clustered ivf default scan fraction $frac")
@@ -100,11 +100,11 @@ class ClusteredAnnSpec extends AnyFunSuite {
   }
 
   test("IVF at 3 probes of the derived (46) cells: recall holds, fraction is small") {
-    val got = pairs(Similarity.topKIvfIters(spark, dir, 2, probes = 3))
+    val got = pairs(Similarity.topKIvfIters(spark, dir, probes = 3))
     val r = recall(got)
     assert(r >= 0.9, s"clustered ivf recall $r")
     val frac =
-      Similarity.ivfCandidateIds(spark, dir, 2, probes = 3).count() / MaxPairs
+      Similarity.ivfCandidateIds(spark, dir, probes = 3).count() / MaxPairs
     info(f"clustered IVF(3 of derived cells) recall=$r%.3f scan_fraction=$frac%.4f")
     assert(frac <= 0.3, s"clustered ivf scan fraction $frac")
   }

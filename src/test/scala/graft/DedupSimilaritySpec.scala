@@ -133,6 +133,43 @@ class DedupSimilaritySpec extends AnyFunSuite {
       exact.get((qid, nid)).foreach(e => assert(e == cos)) }
   }
 
+  test("exact rerank of every non-self pair equals the brute-force key bit for bit") {
+    val ids = graft.sources.Tables.embeddings(spark, TestSpark.Sf).select(col("vec_id"))
+    val every = ids.crossJoin(
+        ids.filter(col("vec_id") < 10).select(col("vec_id").as("query_id")))
+      .filter(col("vec_id") =!= col("query_id"))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.as[(Long, Long, Long, Double)].collect().toSeq
+        .map { case (q, n, r, c) => (q, n, r, java.lang.Double.doubleToRawLongBits(c)) }
+        .sorted
+    val oracle = rows(Similarity.topKBruteForce(spark, TestSpark.Sf))
+    assert(oracle.size == 50)
+    assert(rows(Similarity.exactRerank(spark, TestSpark.Sf, every)) == oracle)
+  }
+
+  test("a second construction of the six ANN keys starts no job") {
+    val keys = Seq("sim_topk_lsh", "sim_topk_ivf", "sim_topk_pq",
+      "sim_topk_ivfpq", "sim_topk_ivfpq_res", "sim_topk_opq")
+    def construct(k: String) = SparkEntry.queries(k)(spark, TestSpark.Sf)
+    keys.foreach(construct)
+    val jobs = keys.map { k =>
+      val n = new java.util.concurrent.atomic.AtomicInteger
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          n.incrementAndGet()
+      }
+      org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        construct(k)
+        org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
+      } finally spark.sparkContext.removeSparkListener(listener)
+      k -> n.get
+    }
+    assert(jobs == keys.map(_ -> 0))
+  }
+
   test("residual IVF-PQ (IVFADC): recall@5 >= 0.9 after exact rerank, and deterministic") {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.as[(Long, Long, Long, Double)].collect().toSeq
